@@ -334,6 +334,7 @@ def ensure_sf(sf: float, force: bool = False) -> str:
     pq.write_table(gen_media(rng_m, 256), os.path.join(tmp, "media.parquet"))
     with open(os.path.join(tmp, "_GENERATED"), "w") as f:
         f.write(f"{GEN_VERSION} seed={SEED} n={n}\n")
+    stale = None
     if os.path.isdir(d):
         if _marker_valid(d) and not force:
             # a concurrent generator published while we built — use its
@@ -343,13 +344,12 @@ def ensure_sf(sf: float, force: bool = False) -> str:
         # stale version (or force): swap out-of-place, never truncate
         # files a concurrent reader may hold open
         stale = tempfile.mkdtemp(prefix=f"sf{sf:g}.stale-", dir=DATA_ROOT)
-        os.rename(d, os.path.join(stale, "old"))
         try:
-            os.rename(tmp, d)
+            os.rename(d, os.path.join(stale, "old"))
         except OSError:
-            shutil.rmtree(tmp, ignore_errors=True)
-        shutil.rmtree(stale, ignore_errors=True)
-        return d
+            # a concurrent generator swapped it out first: publish
+            # below, or lose that race to the winner's copy
+            pass
     try:
         os.rename(tmp, d)
     except OSError:
@@ -357,6 +357,9 @@ def ensure_sf(sf: float, force: bool = False) -> str:
         shutil.rmtree(tmp, ignore_errors=True)
         if not _marker_valid(d):
             raise
+    finally:
+        if stale is not None:
+            shutil.rmtree(stale, ignore_errors=True)
     return d
 
 

@@ -57,10 +57,10 @@ def tokens_curation_pipeline(toks: DataFrame,
     Scale notes: the exact-survivor frame is persisted serialized
     (consumed by the LSH shingle side, both Jaccard verify sides, the
     CC node list, and the survivor join); connected components
-    localCheckpoints per round.  The wide ops are all keyed by uniform
-    hashes (array digest, 32-bit gram hashes, band signatures, doc
-    ids) — no natural skew key anywhere, the property that lets the
-    same DAG run at 10^12 sequences."""
+    solves on the driver when the edge list fits its memory.  The wide
+    ops are all keyed by uniform hashes (array digest, 32-bit gram
+    hashes, band signatures, doc ids) — no natural skew key anywhere,
+    the property that lets the same DAG run at 10^12 sequences."""
     from pyspark.sql import Observation
 
     from .cluster import cluster_survivors, connected_components

@@ -33,6 +33,7 @@ from ..operators.enrich import broadcast_enrich, prepare_pods_dim
 from ..operators.partitioners import salted_repartition
 from ..operators.regex_parser import RegexParser, kv_extract
 from ..operators.routing import RoutingTable, DEFAULT_ROUTES, with_route
+from ..session import _parse_mem
 from ..sinks.writers import (SinkConfig, quarantine_path, serialize_records,
                              split_valid, write_sink)
 from ..sources.tokens_source import read_tokens, with_body
@@ -109,15 +110,6 @@ ATTR_COLS = ["source", "severity_text", "namespace", "deployment", "pod_name"]
 def _unit_count_aggs(units: list[int]) -> list:
     return [F.coalesce(F.sum(F.when(F.col("unit") == u, 1).otherwise(0)),
                        F.lit(0)).alias(f"u{u}") for u in units]
-
-
-def _parse_mem(s: str) -> int:
-    """'12g' / '512m' / '1t' / plain bytes -> bytes."""
-    s = s.strip().lower()
-    mult = {"k": 1 << 10, "m": 1 << 20, "g": 1 << 30, "t": 1 << 40}
-    if s and s[-1] in mult:
-        return int(float(s[:-1]) * mult[s[-1]])
-    return int(s)
 
 
 # cached-routed-lineage footprint per input parquet byte: parquet
@@ -204,11 +196,14 @@ def _process_units(df: DataFrame, cfg: PipelineConfig,
     when a sink routed zero rows or kept no doc_id column.)"""
     from pyspark.sql import Observation
     t0 = time.time()
+    # one set of per-unit count columns for every Observation below:
+    # each costs ~8 py4j round trips to build, per unit
+    aggs = _unit_count_aggs(units)
     # input-side counts: one row per doc pre-fan-out, so a plain
     # conditional count per unit == distinct docs routed anywhere
     # (misses take the default route).  Fires with the first write.
     in_obs = Observation()
-    df = df.observe(in_obs, *_unit_count_aggs(units))
+    df = df.observe(in_obs, *aggs)
     persisted = None
     staging = None
     staged_col = None
@@ -248,7 +243,7 @@ def _process_units(df: DataFrame, cfg: PipelineConfig,
     branch_obs: dict[str, "Observation"] = {}
     drop_obs: dict[str, "Observation"] = {}
     try:
-        _write_sink_branches(df, cfg, units, branch_obs, drop_obs,
+        _write_sink_branches(df, cfg, units, aggs, branch_obs, drop_obs,
                              staged_col=staged_col,
                              partition_cols=partition_cols,
                              partition_values=partition_values)
@@ -281,7 +276,7 @@ def _process_units(df: DataFrame, cfg: PipelineConfig,
 
 
 def _write_sink_branches(df: DataFrame, cfg: PipelineConfig,
-                         units: list[int],
+                         units: list[int], aggs: list,
                          branch_obs: dict, drop_obs: dict,
                          staged_col: str | None = None,
                          partition_cols: list[str] | None = None,
@@ -291,7 +286,9 @@ def _write_sink_branches(df: DataFrame, cfg: PipelineConfig,
     table partitioned by that column — the equality filter prunes to
     the sink's own files instead of scanning the array column.
     ``partition_cols`` extends the sink layout beyond the default
-    ``unit`` (incremental ingest adds a leading ``cycle``)."""
+    ``unit`` (incremental ingest adds a leading ``cycle``).  ``aggs``
+    are the caller's ``_unit_count_aggs(units)``, observed on every
+    branch."""
     from pyspark.sql import Observation
     partition_cols = partition_cols or ["unit"]
     for sink_name in cfg.routes.all_sinks():
@@ -313,7 +310,7 @@ def _write_sink_branches(df: DataFrame, cfg: PipelineConfig,
             # constraints are configured on the sink.)
             branch, bad = split_valid(branch, sink)
             dobs = Observation()
-            bad = bad.observe(dobs, *_unit_count_aggs(units))
+            bad = bad.observe(dobs, *aggs)
             # dynamic overwrite only rewrites partitions PRESENT in the
             # data — a re-run whose unit now quarantines zero rows would
             # leave the stale unit=K dir behind (and a later retry would
@@ -332,7 +329,7 @@ def _write_sink_branches(df: DataFrame, cfg: PipelineConfig,
                 .partitionBy(*partition_cols).parquet(qp)
             drop_obs[sink_name] = dobs
         obs = Observation()
-        branch = branch.observe(obs, *_unit_count_aggs(units))
+        branch = branch.observe(obs, *aggs)
         if cfg.salt_partitions:
             branch = salted_repartition(branch, "source", cfg.salt_partitions)
         write_sink(branch, sink, partition_cols=partition_cols)

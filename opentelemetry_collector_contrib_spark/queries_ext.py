@@ -663,8 +663,8 @@ def q_simhash_pairs(spark, sf_dir):
 
 def q_dedup_clusters(spark, sf_dir):
     """Transitive duplicate clusters: connected components (min-label
-    propagation) over the simhash near-pair graph — pair (A,B)+(B,C)
-    collapses A,B,C even though (A,C) was never emitted."""
+    ids, datapipe/cluster.py) over the simhash near-pair graph — pair
+    (A,B)+(B,C) collapses A,B,C even though (A,C) was never emitted."""
     from .datapipe.cluster import connected_components
     corpus = _near_corpus(spark, sf_dir)
     fp = simhash_fingerprints(corpus)
@@ -2905,7 +2905,7 @@ SELECT id_a, id_b, jaccard FROM jac WHERE jaccard >= 0.4""".replace(
                 for i in range(NUM_HASHES))),
 
         "token_quality": f"""WITH t AS (
-  SELECT doc_id AS id, tokens, len(tokens)::INT AS n_tok
+  SELECT doc_id AS id, tokens, coalesce(len(tokens), 0)::INT AS n_tok
   FROM read_parquet('{d}/tokens.parquet')
 ), vals AS (
   SELECT id, i, tokens[i] AS v

@@ -18,6 +18,15 @@ import os
 from pyspark.sql import SparkSession
 
 
+def _parse_mem(s: str) -> int:
+    """'12g' / '512m' / '1t' / plain bytes -> bytes (Spark memory confs)."""
+    s = s.strip().lower()
+    mult = {"k": 1 << 10, "m": 1 << 20, "g": 1 << 30, "t": 1 << 40}
+    if s and s[-1] in mult:
+        return int(float(s[:-1]) * mult[s[-1]])
+    return int(s)
+
+
 def get_spark(app_name: str = "otelcol-spark",
               cpus: int | None = None,
               extra_conf: dict | None = None) -> SparkSession:

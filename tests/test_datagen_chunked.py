@@ -6,6 +6,7 @@ streams chunks through a ParquetWriter.  Pure pyarrow — no Spark.
 """
 
 import pyarrow.parquet as pq
+import pytest
 
 from opentelemetry_collector_contrib_spark import datagen
 
@@ -40,3 +41,42 @@ def test_single_shot_path_unchanged(tmp_path, monkeypatch):
     got = pq.read_table(p)
     assert got.column("doc_id").to_pylist() == want.column("doc_id").to_pylist()
     assert got.column("n_tok").to_pylist() == want.column("n_tok").to_pylist()
+
+
+@pytest.mark.parametrize("winner_published", [False, True])
+def test_ensure_sf_survives_lost_stale_swap(tmp_path, monkeypatch,
+                                            winner_published):
+    """Two generators find the same stale dir and both try to swap it
+    out.  Here the other one renamed it first, so our swap finds no
+    ``d``.  We must then publish our copy, or, when the winner has
+    already published, drop ours and return the winner's."""
+    import os
+
+    monkeypatch.setattr(datagen, "DATA_ROOT", str(tmp_path))
+    d = datagen._sf_dir(0.0001)
+    os.makedirs(d)
+    with open(os.path.join(d, "_GENERATED"), "w") as f:
+        f.write("v0 stale\n")
+    real_rename = os.rename
+
+    def racing_rename(src, dst):
+        if src != d:
+            return real_rename(src, dst)
+        real_rename(d, str(tmp_path / "competitor-stale"))
+        try:
+            return real_rename(src, dst)      # d is gone: raises
+        finally:
+            if winner_published:
+                os.makedirs(d)
+                with open(os.path.join(d, "_GENERATED"), "w") as f:
+                    f.write(f"{datagen.GEN_VERSION} winner\n")
+
+    monkeypatch.setattr(os, "rename", racing_rename)
+    assert datagen.ensure_sf(0.0001) == d
+    assert datagen._marker_valid(d)
+    winner = open(os.path.join(d, "_GENERATED")).read().endswith("winner\n")
+    assert winner == winner_published
+    assert os.path.exists(os.path.join(d, "tokens.parquet")) \
+        != winner_published
+    # neither our build dir nor the stale-swap dir is left behind
+    assert sorted(os.listdir(tmp_path)) == ["competitor-stale", "sf0.0001"]

@@ -100,3 +100,36 @@ def test_single_python_stage(spark):
     assert plan.count("ArrowEvalPython") == 1
     assert "BatchEvalPython" not in plan
     assert "Exchange" not in plan
+
+
+def test_oracle_parity_with_null_array(spark, tmp_path):
+    """The gate's DuckDB oracle and the Spark battery agree row for row
+    on DOCS, including the NULL-array and empty-array docs (DuckDB's
+    len(NULL) is NULL, so the oracle must coalesce n_tok to 0 as Spark
+    does)."""
+    import duckdb
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from opentelemetry_collector_contrib_spark.queries_ext import (
+        extra_oracles, q_token_quality)
+    pq.write_table(pa.table({
+        "doc_id": [d for d, _ in DOCS],
+        "tokens": pa.array([t for _, t in DOCS], pa.list_(pa.int32()))}),
+        str(tmp_path / "tokens.parquet"))
+    sql = extra_oracles(str(tmp_path))["token_quality"]
+    want = duckdb.connect().execute(sql).fetchdf()
+    got = q_token_quality(spark, None, str(tmp_path)).toPandas()
+    assert sorted(got.columns) == sorted(want.columns)
+
+    def canon(df):
+        cols = sorted(df.columns)
+        return sorted(
+            tuple(None if v is None or v != v
+                  else round(float(v), 6) if isinstance(v, float)
+                  else int(v) if not isinstance(v, str) else v
+                  for v in rec)
+            for rec in df[cols].astype(object).itertuples(index=False))
+    assert canon(got) == canon(want)
+    null_row = want.set_index("id").loc["nullarr"]
+    assert null_row["n_tok"] == 0 and not null_row["keep"]

@@ -2,7 +2,8 @@
 """Fuzzy incremental-dedup scale proof: per-cycle cost tracks the
 INCREMENT while the committed history grows.
 
-The exact ingest path has this proof (tools/bench_incremental.py);
+The exact ingest path has this proof
+(python3 perfbench/run.py --workload incremental_cycles);
 the fuzzy path adds per-cycle state (survivor band signatures) and a
 cross-history candidate join whose cost COULD silently grow with the
 number of committed cycles.  This bench runs N same-sized increments —
