@@ -48,7 +48,7 @@ def _pods_path(sf_dir: str) -> str:
 
 
 def _parsed(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # fused backend: ONE Arrow hop does detokenize + named-group extract
+    # ONE Arrow hop does detokenize + RE2 named-group extract
     return RegexParser().apply(read_tokens(spark, _tok_path(sf_dir)))
 
 

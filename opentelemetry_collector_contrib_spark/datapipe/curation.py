@@ -23,7 +23,6 @@ broadcast-hash on the shingle string.
 
 from __future__ import annotations
 
-import pandas as pd
 from pyspark import StorageLevel
 from pyspark.sql import DataFrame, Window, functions as F
 
@@ -129,15 +128,14 @@ def pack_tokens(df: DataFrame, budget: int = 2048,
     Scale shape: the chunk assignment is pack_chunks' cumsum window,
     computed INLINE over the tokens-carrying frame (re-joining the
     assignment by id would hash-shuffle the heaviest column twice);
-    an Arrow hop then SLICES each doc's array at chunk boundaries —
+    Catalyst ``posexplode(sequence(first_chunk, last_chunk))`` +
+    ``slice`` then cuts each doc's array at chunk boundaries —
     the shuffle carries (grp, chunk, start, sub-array) rows, at most
     ``spanned chunks`` per doc, never per-token rows — and the
     reassembly groupBy holds ≤ budget tokens per chunk.  Zero-length
     and NULL token arrays take no space and carry no span (``size``
     of NULL is -1 under non-ANSI Spark — coalesced to 0 so a NULL row
     cannot shift every later doc's offset in its group)."""
-    from pyspark.sql import types as T
-
     if budget <= 0:
         raise ValueError("budget must be positive")
     n_groups = _resolve_groups(df, n_groups)
@@ -151,43 +149,27 @@ def pack_tokens(df: DataFrame, budget: int = 2048,
            .withColumn("_prev", F.sum("_nt").over(w) - F.col("_nt"))
            .withColumn("first_chunk",
                        F.floor(F.col("_prev") / budget).cast("bigint"))
+           .withColumn("last_chunk",
+                       F.floor((F.col("_prev") + F.col("_nt") - 1) / budget)
+                       .cast("bigint"))
            .withColumn("chunk_offset",
                        (F.col("_prev") % budget).cast("bigint"))
            .filter(F.col("_nt") > 0))
 
-    part_type = T.ArrayType(T.StructType([
-        T.StructField("chunk", T.LongType()),
-        T.StructField("start", T.IntegerType()),
-        T.StructField("part", T.ArrayType(T.IntegerType())),
-    ]))
-
-    @F.pandas_udf(part_type)
-    def split_parts(tokens: pd.Series, first_chunk: pd.Series,
-                    offset: pd.Series) -> pd.Series:
-        out = []
-        for toks, fc, off in zip(tokens, first_chunk, offset):
-            parts = []
-            pos = 0
-            chunk = int(fc)
-            start = int(off)
-            n = len(toks)
-            while pos < n:
-                take = min(budget - start, n - pos)
-                parts.append((chunk, start,
-                              [int(t) for t in toks[pos:pos + take]]))
-                pos += take
-                chunk += 1
-                start = 0
-            out.append(parts)
-        return pd.Series(out)
-
+    # one row per (doc, chunk it touches): j-th part starts at token
+    # ``pos`` of the doc and at offset ``start`` inside its chunk
+    j = F.col("j").cast("bigint")
+    off = F.col("chunk_offset")
+    pos = F.when(j == 0, F.lit(0)).otherwise(j * budget - off)
+    start = F.when(j == 0, off).otherwise(F.lit(0))
     parts = (src.select(
-        F.col(id_col), "grp",
-        F.explode(split_parts(F.col(tokens_col), F.col("first_chunk"),
-                              F.col("chunk_offset"))).alias("p"))
-        .select(id_col, "grp", F.col("p.chunk").alias("chunk"),
-                F.col("p.start").alias("start"),
-                F.col("p.part").alias("part")))
+        F.col(id_col), "grp", F.col(tokens_col), "_nt", "chunk_offset",
+        F.posexplode(F.sequence("first_chunk", "last_chunk"))
+        .alias("j", "chunk"))
+        .select(id_col, "grp", "chunk", start.cast("int").alias("start"),
+                F.slice(tokens_col, (pos + 1).cast("int"),
+                        F.least(budget - start, F.col("_nt") - pos)
+                        .cast("int")).alias("part")))
     ordered = F.array_sort(F.collect_list(F.struct(
         F.col("start"), F.col(id_col).alias("doc_id"), F.col("part"))))
     return (parts.groupBy("grp", "chunk")

@@ -48,24 +48,6 @@ def norm_words(text_col) -> "F.Column":
     return F.filter(F.split(cleaned, " "), lambda w: w != "")
 
 
-def word_shingles(words_col, k: int = 3) -> "F.Column":
-    """Distinct word k-grams joined by a space.  Guarded for n < k:
-    Spark's sequence(1, 0) is DESCENDING, not empty.
-
-    NB: higher-order functions are interpreted (no codegen) — on the hot
-    path use ``shingles_udf`` (Arrow-batched, ~50x faster measured);
-    this expression form is kept for plan-only contexts and parity
-    tests."""
-    n = F.size(words_col)
-    grams = F.when(
-        n >= k,
-        F.transform(
-            F.sequence(F.lit(1), n - (k - 1)),
-            lambda i: F.array_join(F.slice(words_col, i, k), " "))
-    ).otherwise(F.array().cast("array<string>"))
-    return F.array_distinct(grams)
-
-
 _NORM_RX = re.compile(r"[^a-z0-9]+")
 
 
@@ -83,9 +65,8 @@ def _norm_words_py(t: str | None) -> list[str]:
 
 @lru_cache(maxsize=8)
 def shingles_udf(k: int):
-    """Arrow-batched shingler: text -> distinct word k-grams.  Same
-    output as word_shingles(norm_words(text), k) but one Python hop per
-    batch instead of interpreted Catalyst HOFs per row."""
+    """Arrow-batched shingler: text -> distinct word k-grams of the
+    ``norm_words`` tokenization, one Python hop per batch."""
     @F.pandas_udf(T.ArrayType(T.StringType()))
     def sh(text: pd.Series) -> pd.Series:
         def one(t):

@@ -1,6 +1,6 @@
 from .severity import SEVERITY_TABLE, severity_text_expr, severity_number_expr, severity_case_sql
 from .timefmt import strptime_to_spark
-from .tokens import decode_tokens_udf, encode_text, DECODE_SQL_DUCKDB
+from .tokens import encode_text, DECODE_SQL_DUCKDB
 
 __all__ = [
     "SEVERITY_TABLE",
@@ -8,7 +8,6 @@ __all__ = [
     "severity_number_expr",
     "severity_case_sql",
     "strptime_to_spark",
-    "decode_tokens_udf",
     "encode_text",
     "DECODE_SQL_DUCKDB",
 ]

@@ -4,11 +4,11 @@ The north-star pipeline names "grok/regex extraction" (the stanza
 regex_parser's sibling dialect): a grok expression is a readable
 template of %{SYNTAX:SEMANTIC} references into a pattern library,
 compiled to a plain named-group regex.  This module is that compiler —
-the output feeds RegexParser unchanged, so grok rides every backend
-(including the RE2 mapInArrow fast path: the library below is
-RE2-safe — alternations and character classes only, no lookaround or
-backreferences, and strictly NON-capturing internal groups so group
-numbering is exactly the named captures).
+the output feeds RegexParser unchanged, so grok rides its RE2
+mapInArrow path: the library below is RE2-safe — alternations and
+character classes only, no lookaround or backreferences, and strictly
+NON-capturing internal groups so group numbering is exactly the named
+captures.
 
 Pattern set: the commonly-published logstash core patterns, re-derived
 here (public knowledge), trimmed to RE2-compatible forms.

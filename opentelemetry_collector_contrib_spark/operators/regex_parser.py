@@ -11,31 +11,25 @@ README.md:24-36, testdata/config.yaml:7-13):
   (``parsed = false``) and keep the row — goldens assert they are
   flagged, never silently dropped (FIXTURES.md §5.3).
 
-Four execution backends (identical output, tests assert equality):
-- 'arrow' (default, the fastest measured — ~9x over 'fused' at sf0.1):
-  ``mapInArrow`` keeps the whole parse in NATIVE code: detokenize is a
-  buffer-level Arrow StringArray construction (list offsets reused as
-  string offsets, zero per-row Python) and the extraction is ONE
-  ``pyarrow.compute.extract_regex`` call per batch (RE2, C++).
-  Dialect caveat: RE2 — no lookaround/backrefs; patterns RE2 rejects
-  fall back to 'fused' automatically (validated at plan build).
-  Pushdown caveat: mapInArrow is opaque to Catalyst, so filters
-  written AFTER .apply() do not reach the scan — apply source-level
-  filters before the parse stage (the pipeline does).
-- 'fused': ONE Arrow-batched pandas UDF taking the raw ``tokens``
-  column and returning struct(body, <named groups>) — bulk numpy
-  detokenize + a single ``pd.Series.str.extract`` (Python re) pass per
-  batch.  Full Python-regex dialect; columns flow AROUND the UDF, so
-  Catalyst pushdown/pruning still work.
-- 'pandas': same extract UDF over an existing ``body`` string column.
-- 'native': per-group ``regexp_extract`` — zero Python, but each
-  output column re-executes the regex (Catalyst collapses projections
-  and re-inlines the extract struct), so it is SLOWER than 'fused' on
-  the hot path; kept for cross-checking and for JVM-only deployments.
+One execution path, in the RE2 dialect.  Stanza compiles the pattern
+with Go ``regexp``, which is RE2, and rejects a bad pattern when the
+config loads (SURVEY §3.2); so does this stage: a pattern RE2 rejects
+(lookaround, backreferences) raises ``ValueError`` in ``__init__``.
+RE2 is also the DuckDB oracle's dialect, so ``$`` is end of text here,
+there and in stanza (Python ``re`` would also match before a final
+newline).
 
-Both add: one string column per named group, ``parsed`` boolean, and —
-when configured — ``event_ts`` (timestamp), ``severity_text``,
-``severity_number``.
+The parse is ONE ``mapInArrow`` hop that keeps the row path in native
+code: detokenize is a buffer-level Arrow StringArray construction
+(``functions/tokens.py::decode_arrow``) and the extraction is ONE
+``pyarrow.compute.extract_regex`` call (RE2, C++) per batch.
+Pushdown caveat: mapInArrow is opaque to Catalyst, so filters written
+AFTER .apply() do not reach the scan — apply source-level filters
+before the parse stage (the pipeline does).
+
+It adds ``body``, one string column per named group, a ``parsed``
+boolean and — when configured — ``event_ts`` (timestamp),
+``severity_text`` and ``severity_number``.
 """
 
 from __future__ import annotations
@@ -43,8 +37,9 @@ from __future__ import annotations
 import re
 from functools import lru_cache
 
-import pandas as pd
-from pyspark.sql import Column, DataFrame
+import pyarrow as pa
+import pyarrow.compute as pc
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..functions.severity import severity_number_expr, severity_text_expr
@@ -78,56 +73,42 @@ def group_number(pattern: str, group_name: str) -> int:
     return _compiled(pattern).groupindex[group_name]
 
 
-def _re2_ok(pattern: str) -> bool:
-    """True when pyarrow's RE2 accepts the pattern (driver-side probe)."""
-    try:
-        import pyarrow as pa
-        import pyarrow.compute as pc
-        pc.extract_regex(pa.array([], pa.string()), pattern)
-        return True
-    except Exception:
-        return False
-
-
 class RegexParser:
     """Config-driven regex parse stage (a DataFrame -> DataFrame builder,
-    the Spark analog of a stanza operator plugin)."""
+    the Spark analog of a stanza operator plugin) over a ``tokens``
+    column."""
 
     def __init__(self,
                  pattern: str = DEFAULT_LOG_PATTERN,
-                 parse_from: str = "body",
                  tokens_col: str = "tokens",
                  timestamp_from: str | None = "ts",
                  timestamp_layout: str = "%Y-%m-%d %H:%M:%S",
-                 severity_from: str | None = "sev",
-                 backend: str = "arrow"):
+                 severity_from: str | None = "sev"):
         self.pattern = pattern
-        self.parse_from = parse_from
         self.tokens_col = tokens_col
         self.timestamp_from = timestamp_from
         self.timestamp_layout = timestamp_layout
         self.severity_from = severity_from
-        self.backend = backend
         self.groups = list(_compiled(pattern).groupindex.keys())
         if not self.groups:
             raise ValueError("regex_parser requires named capture groups")
-        if backend == "arrow" and not _re2_ok(pattern):
-            # RE2 rejects the pattern (lookaround/backrefs) — fall back
-            # to the Python-re fused path, identical semantics
-            self.backend = "fused"
+        try:        # the same RE2 compile _extract runs on every batch
+            pc.extract_regex(pa.array([], pa.string()), pattern)
+        except pa.ArrowInvalid as e:
+            raise ValueError(
+                f"regex_parser pattern {pattern!r} is not RE2 with only "
+                f"named groups: {e}") from e
 
-    # -- backends ---------------------------------------------------------
-    def _extract_arrow(self, df: DataFrame) -> DataFrame:
+    def _extract(self, df: DataFrame) -> DataFrame:
         """tokens -> body + group columns with ZERO Python on the row
         path: buffer-level detokenize + one RE2 extract_regex per
         batch (mapInArrow)."""
         from pyspark.sql import types as ST
         pattern, groups = self.pattern, self.groups
-        tok_col = self.tokens_col
         names = [f.name for f in df.schema.fields]
-        # pre-existing body/group columns are REPLACED (the fused path's
-        # withColumn semantics) — keeping them would emit duplicate
-        # column names and make downstream F.col() ambiguous
+        # pre-existing body/group columns are REPLACED (withColumn
+        # semantics) — keeping them would emit duplicate column names
+        # and make downstream F.col() ambiguous
         replaced = {"body", *groups}
         keep = [i for i, n in enumerate(names) if n not in replaced]
         keep_names = [names[i] for i in keep]
@@ -135,23 +116,14 @@ class RegexParser:
             [df.schema.fields[i] for i in keep]
             + [ST.StructField("body", ST.StringType())]
             + [ST.StructField(g, ST.StringType()) for g in groups])
-        tok_idx = names.index(tok_col)
+        tok_idx = names.index(self.tokens_col)
 
         def fn(batches):
-            import pyarrow as pa
-            import pyarrow.compute as pc
-
             from opentelemetry_collector_contrib_spark.functions.tokens import (
                 decode_arrow)
             for b in batches:
                 body = decode_arrow(b.column(tok_idx))
-                # Python-re '$' matches BEFORE one trailing newline; RE2
-                # '$' is end-of-text only — strip a single trailing \n
-                # for MATCHING (body itself stays raw) so the backends
-                # agree on newline-terminated lines
-                ex = pc.extract_regex(
-                    pc.replace_substring_regex(body, r"\n$", ""),
-                    pattern)  # null struct on miss
+                ex = pc.extract_regex(body, pattern)   # null struct on miss
                 arrays = ([b.column(i) for i in keep]
                           + [body]
                           + [pc.struct_field(ex, g) for g in groups])
@@ -160,69 +132,9 @@ class RegexParser:
 
         return df.mapInArrow(fn, out_schema)
 
-    def _extract_fused(self, df: DataFrame) -> DataFrame:
-        """tokens -> struct(body, groups) in ONE Arrow hop (bulk numpy
-        detokenize + one str.extract pass per batch)."""
-        from ..functions.tokens import decode_batch
-        pattern = self.pattern
-        fields = ", ".join(f"{g}: string" for g in self.groups)
-
-        @F.pandas_udf(f"struct<body: string, {fields}>")
-        def decode_extract(tokens: pd.Series) -> pd.DataFrame:
-            rx = _compiled(pattern)          # per-executor compile cache
-            body = decode_batch(tokens)
-            out = body.str.extract(rx)       # vectorized named-group extract
-            out.columns = list(rx.groupindex.keys())
-            out.insert(0, "body", body)
-            return out
-
-        df = df.withColumn("_g", decode_extract(F.col(self.tokens_col)))
-        return df.withColumn("body", F.col("_g.body"))
-
-    def _extract_pandas(self, df: DataFrame) -> DataFrame:
-        pattern = self.pattern
-        fields = ", ".join(f"{g}: string" for g in self.groups)
-
-        @F.pandas_udf(f"struct<{fields}>")
-        def extract(s: pd.Series) -> pd.DataFrame:
-            rx = _compiled(pattern)          # per-executor compile cache
-            out = s.str.extract(rx)          # vectorized named-group extract
-            out.columns = list(rx.groupindex.keys())
-            return out
-
-        return df.withColumn("_g", extract(F.col(self.parse_from)))
-
-    def _extract_native(self, df: DataFrame) -> DataFrame:
-        # Spark regexp_extract returns '' on miss; use a match guard to
-        # preserve NULL-on-miss so both backends agree exactly.
-        rx = java_pattern(self.pattern)
-        matched = F.col(self.parse_from).rlike(rx)
-        cols = [
-            F.when(matched,
-                   F.regexp_extract(F.col(self.parse_from), rx,
-                                    group_number(self.pattern, g))).alias(g)
-            for g in self.groups
-        ]
-        return df.withColumn("_g", F.when(matched, F.struct(*cols)))
-
-    # -- public -----------------------------------------------------------
     def apply(self, df: DataFrame) -> DataFrame:
-        if self.backend == "arrow":
-            df = self._extract_arrow(df)
-            df = df.withColumn(
-                "parsed", F.col(self.groups[0]).isNotNull())
-        else:
-            if self.backend == "fused":
-                df = self._extract_fused(df)
-            elif self.backend == "pandas":
-                df = self._extract_pandas(df)
-            else:
-                df = self._extract_native(df)
-            first = self.groups[0]
-            df = df.withColumn("parsed", F.col(f"_g.{first}").isNotNull())
-            for g in self.groups:
-                df = df.withColumn(g, F.col(f"_g.{g}"))
-            df = df.drop("_g")
+        df = self._extract(df)
+        df = df.withColumn("parsed", F.col(self.groups[0]).isNotNull())
         if self.timestamp_from:
             fmt = strptime_to_spark(self.timestamp_layout)
             # try_to_timestamp: ANSI mode throws on out-of-range dates

@@ -65,8 +65,7 @@ def _regex_parser(spark: SparkSession, conf: dict) -> Stage:
         timestamp_from=conf.get("timestamp", {}).get("parse_from", "ts"),
         timestamp_layout=conf.get("timestamp", {}).get("layout",
                                                        "%Y-%m-%d %H:%M:%S"),
-        severity_from=conf.get("severity", {}).get("parse_from", "sev"),
-        backend=conf.get("backend", "arrow"))
+        severity_from=conf.get("severity", {}).get("parse_from", "sev"))
     return parser.apply
 
 

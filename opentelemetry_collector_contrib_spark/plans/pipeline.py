@@ -36,7 +36,7 @@ from ..operators.routing import RoutingTable, DEFAULT_ROUTES, with_route
 from ..session import _parse_mem
 from ..sinks.writers import (SinkConfig, quarantine_path, serialize_records,
                              split_valid, write_sink)
-from ..sources.tokens_source import read_tokens, with_body
+from ..sources.tokens_source import read_tokens
 from .manifest import RunManifest, unit_column
 
 
@@ -50,7 +50,6 @@ class PipelineConfig:
     sinks: dict[str, SinkConfig] = field(default_factory=dict)
     n_units: int = 8               # manifest granularity
     salt_partitions: int = 0       # >0: salted repartition before writes
-    decode_backend: str = "native"
     single_pass: bool = True       # one parse pass across sinks
     # how single_pass avoids the N-sink re-parse:
     #  "persist" — cache the routed lineage MEMORY_AND_DISK (serialized;
@@ -94,9 +93,6 @@ def build_lineage(spark: SparkSession, cfg: PipelineConfig,
     of the same schema)."""
     if df is None:
         df = read_tokens(spark, cfg.tokens_path)
-    if cfg.parser.backend not in ("fused", "arrow"):
-        # fused/arrow detokenize inside the parser
-        df = with_body(df, backend=cfg.decode_backend)
     df = cfg.parser.apply(df)
     df = kv_extract(df, "pod_ip")
     pods = prepare_pods_dim(spark.read.parquet(cfg.pods_path))

@@ -11,18 +11,16 @@ Scale notes:
 - The scan is a plain columnar read: column pruning + predicate pushdown
   reach the parquet/Iceberg scan via Catalyst (verified in tests by
   checking PushedFilters in the physical plan).
-- decode backends: 'native' (default) keeps detokenization inside
-  whole-stage codegen (TRANSFORM + CHAR + ARRAY_JOIN — zero Python);
-  'pandas' uses the Arrow-batched UDF (the north-star shape, and the
-  template for real BPE detokenize where a vocab lookup is needed).
+- ``with_body`` keeps detokenization inside Catalyst (TRANSFORM + CHAR
+  + ARRAY_JOIN — zero Python).  The regex parse stage does not need it:
+  it detokenizes inside its own Arrow hop
+  (``operators/regex_parser.py``).
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-
-from ..functions.tokens import decode_tokens_udf
 
 
 def iceberg_available(spark: SparkSession) -> bool:
@@ -66,14 +64,10 @@ def read_tokens(spark: SparkSession, path: str, fmt: str = "parquet") -> DataFra
     return spark.read.parquet(path)
 
 
-def with_body(df: DataFrame, backend: str = "native") -> DataFrame:
+def with_body(df: DataFrame) -> DataFrame:
     """Add ``body`` = detokenized log line.  ``tokens`` is carried
     through untouched (the per-row token-array-equality invariant)."""
-    if backend == "pandas":
-        body = decode_tokens_udf(F.col("tokens"))
-    else:
-        # pure Catalyst: codepoint -> char, join.  CHAR is mod-256 in
-        # Spark, safe for our ASCII vocab; non-ASCII vocabs use the
-        # pandas backend.
-        body = F.array_join(F.transform(F.col("tokens"), lambda t: F.char(t)), "")
+    # pure Catalyst: codepoint -> char, join.  CHAR is mod-256 in Spark,
+    # safe for our ASCII vocab.
+    body = F.array_join(F.transform(F.col("tokens"), lambda t: F.char(t)), "")
     return df.withColumn("body", body)

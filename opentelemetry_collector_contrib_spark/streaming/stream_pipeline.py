@@ -21,7 +21,6 @@ from pyspark.sql import functions as F
 from ..operators.enrich import broadcast_enrich, prepare_pods_dim
 from ..operators.regex_parser import RegexParser, kv_extract
 from ..operators.routing import RoutingTable, DEFAULT_ROUTES, with_route
-from ..sources.tokens_source import with_body
 
 TOKENS_DDL = "doc_id string, tokens array<int>, n_tok int, source string"
 
@@ -33,8 +32,6 @@ def streaming_pipeline(spark: SparkSession, tokens_dir: str, pods_path: str,
     df = (spark.readStream.schema(TOKENS_DDL)
           .parquet(tokens_dir))
     parser = parser or RegexParser()
-    if parser.backend not in ("fused", "arrow"):
-        df = with_body(df)      # fused/arrow detokenize inside the parser
     df = parser.apply(df)
     df = kv_extract(df, "pod_ip")
     pods = prepare_pods_dim(spark.read.parquet(pods_path))   # static dim side
@@ -59,8 +56,6 @@ def streaming_pipeline_fresh_dim(spark: SparkSession, tokens_dir: str,
     StreamingQuery."""
     df = spark.readStream.schema(TOKENS_DDL).parquet(tokens_dir)
     parser = parser or RegexParser()
-    if parser.backend not in ("fused", "arrow"):
-        df = with_body(df)      # fused/arrow detokenize inside the parser
     parsed = kv_extract(parser.apply(df), "pod_ip")
 
     def _process(batch_df, batch_id: int) -> None:
@@ -99,8 +94,6 @@ def streaming_multi_sink(spark: SparkSession, tokens_dir: str,
 
     df = spark.readStream.schema(TOKENS_DDL).parquet(tokens_dir)
     parser = parser or RegexParser()
-    if parser.backend not in ("fused", "arrow"):
-        df = with_body(df)      # fused/arrow detokenize inside the parser
     parsed = kv_extract(parser.apply(df), "pod_ip")
     sinks = routes.all_sinks()
 

@@ -1,9 +1,10 @@
-"""Parse stage: token decode, regex_parser (both backends), severity
-table, timestamp layout, kv extract, json parser.
+"""Parse stage: token decode, regex_parser (Arrow/RE2, checked against
+DuckDB's RE2), severity table, timestamp layout, kv extract, json parser.
 
 Golden shapes mirror receiver/stanzareceiver/e2e_test.go:59-107 and the
 converter type matrix (converter_test.go:111-130)."""
 
+import duckdb
 import pytest
 from pyspark.sql import functions as F
 
@@ -13,7 +14,7 @@ from opentelemetry_collector_contrib_spark.functions.timefmt import strptime_to_
 from opentelemetry_collector_contrib_spark.operators.json_parser import (
     json_parser, splunk_hec_events)
 from opentelemetry_collector_contrib_spark.operators.regex_parser import (
-    RegexParser, java_pattern, kv_extract)
+    DEFAULT_LOG_PATTERN, RegexParser, java_pattern, kv_extract)
 from opentelemetry_collector_contrib_spark.sources.tokens_source import (
     read_tokens, with_body)
 
@@ -27,88 +28,82 @@ def _lines_df(spark, lines):
     return spark.createDataFrame([(l,) for l in lines], "body string")
 
 
-def test_decode_backends_agree(spark, sf_dir):
-    df = read_tokens(spark, f"{sf_dir}/tokens.parquet").limit(200)
-    nat = with_body(df, backend="native").select("doc_id", "body")
-    pan = with_body(df, backend="pandas").select("doc_id", "body")
-    assert rows(nat) == rows(pan)
+def _tokens_df(spark, lines):
+    return spark.createDataFrame([([ord(c) for c in l],) for l in lines],
+                                 "tokens array<int>")
+
+
+def _duckdb_parse(lines):
+    """{line: (parsed, ts, sev, msg)} from DuckDB's RE2 — the gate
+    oracle's dialect (__spark_entry__._decoded_cte)."""
+    rx = java_pattern(DEFAULT_LOG_PATTERN)
+    got = duckdb.connect().execute(
+        "SELECT l, regexp_matches(l, ?) AS p, "
+        "regexp_extract(l, ?, ['ts', 'sev', 'msg']) AS g "
+        "FROM unnest(?) t(l)", [rx, rx, list(lines)]).fetchall()
+    return {l: (p, *((g["ts"], g["sev"], g["msg"]) if p else (None,) * 3))
+            for l, p, g in got}
 
 
 def test_tokens_carried_untouched(spark, sf_dir):
     """The per-row token-array-equality invariant: parse adds columns,
     never rewrites tokens."""
     df = read_tokens(spark, f"{sf_dir}/tokens.parquet").limit(100)
-    out = RegexParser().apply(with_body(df))
+    out = RegexParser().apply(df)
     before = rows(df.select("doc_id", "tokens"))
     after = rows(out.select("doc_id", "tokens"))
     assert before == after
 
 
-def test_regex_backends_agree(spark):
-    df = _lines_df(spark, [LINE, "--- no match here", ""])
-    cols = ["ts", "sev", "msg", "parsed", "severity_text", "severity_number"]
-    a = RegexParser(backend="pandas").apply(df).select(cols)
-    b = RegexParser(backend="native").apply(df).select(cols)
-    assert rows(a) == rows(b)
-
-
-def test_fused_backend_agrees(spark, sf_dir):
-    """fused (tokens -> body+groups, one Arrow hop) == pandas on body."""
-    df = read_tokens(spark, f"{sf_dir}/tokens.parquet").limit(300)
-    cols = ["doc_id", "body", "ts", "sev", "msg", "parsed",
-            "severity_text", "severity_number"]
-    fused = RegexParser(backend="fused").apply(df).select(cols)
-    pand = RegexParser(backend="pandas").apply(with_body(df)).select(cols)
-    assert rows(fused) == rows(pand)
-
-
-def test_arrow_backend_agrees(spark, sf_dir):
-    """arrow (mapInArrow: buffer decode + RE2 extract) == fused
-    (pandas UDF: numpy decode + Python-re extract), incl. misses."""
-    df = read_tokens(spark, f"{sf_dir}/tokens.parquet").limit(300)
-    cols = ["doc_id", "body", "ts", "sev", "msg", "parsed",
-            "severity_text", "severity_number"]
-    arrow = RegexParser(backend="arrow").apply(df).select(cols)
-    fused = RegexParser(backend="fused").apply(df).select(cols)
-    assert rows(arrow) == rows(fused)
+def test_parse_matches_duckdb_re2(spark, sf_dir):
+    """Both decodes (the parser's Arrow buffer decode and Catalyst
+    with_body) and the RE2 extract agree with DuckDB on the synthetic
+    table plus edge lines: a miss, an empty line, and non-ASCII and
+    wide codepoints."""
+    edge = [LINE, "--- no match here", "",
+            "2020-08-25 05:01:31 WARN h\u00e9llo \u4e16\u754c"]
+    df = read_tokens(spark, f"{sf_dir}/tokens.parquet").select("tokens")
+    df = df.unionByName(_tokens_df(spark, edge))
+    out = RegexParser().apply(with_body(df).withColumnRenamed("body", "wb"))
+    got = out.select("wb", "body", "parsed", "ts", "sev", "msg").collect()
+    assert len(got) == df.count()
+    assert all(r["wb"] == r["body"] for r in got if r["body"].isascii())
+    want = _duckdb_parse(r["body"] for r in got)
+    assert {r["body"]: tuple(r[2:]) for r in got} == want
+    assert {r["body"] for r in got} >= set(edge)
+    assert 0 < sum(r["parsed"] for r in got) < len(got)
 
 
 def test_arrow_backend_falls_back_on_re2_reject():
-    """Lookahead is valid Python-re but not RE2 — the parser must fall
-    back to the fused backend, not break."""
-    p = RegexParser(pattern=r"^(?P<ts>\d+)(?=.)(?P<msg>.*)$",
-                    backend="arrow")
-    assert p.backend == "fused"
+    """Lookahead is valid Python-re but not RE2 — the parser rejects
+    it when built, as stanza rejects a bad pattern at config load."""
+    with pytest.raises(ValueError, match="RE2"):
+        RegexParser(pattern=r"^(?P<ts>\d+)(?=.)(?P<msg>.*)$")
 
 
 def test_arrow_backend_trailing_newline_matches_python_re(spark):
-    """Python-re '$' matches before one trailing newline, RE2's does
-    not — the arrow backend strips one trailing \\n for matching so
-    both backends agree on newline-terminated lines."""
+    """'$' is end of text in RE2, Go regexp and DuckDB: a line with a
+    trailing newline is a miss, and the parser agrees with DuckDB."""
     lines = [LINE, LINE + "\n", LINE + "\n\n", "2020-08-25 05:01:31 INFO x\nmore"]
-    rows_in = [([ord(c) for c in l],) for l in lines]
-    df = spark.createDataFrame(rows_in, "tokens array<int>")
-    cols = ["body", "ts", "sev", "msg", "parsed"]
-    arrow = RegexParser(backend="arrow").apply(df).select(cols)
-    fused = RegexParser(backend="fused").apply(df).select(cols)
-    assert rows(arrow) == rows(fused)
-    got = {r["body"]: r["parsed"] for r in arrow.collect()}
-    assert got[LINE + "\n"] is True          # single trailing \n parses
-    assert got[LINE + "\n\n"] is False       # double does not (both backends)
+    out = RegexParser().apply(_tokens_df(spark, lines))
+    got = {r["body"]: (r["parsed"], r["ts"], r["sev"], r["msg"])
+           for r in out.collect()}
+    assert got == _duckdb_parse(lines)
+    assert [got[l][0] for l in lines] == [True, False, False, False]
 
 
 def test_arrow_backend_replaces_existing_group_columns(spark):
     """A pre-existing column named like a capture group must be
-    REPLACED (fused withColumn semantics), not duplicated."""
+    REPLACED (withColumn semantics), not duplicated."""
     df = spark.createDataFrame(
         [([ord(c) for c in LINE], "OLD")], "tokens array<int>, sev string")
-    out = RegexParser(backend="arrow").apply(df)
+    out = RegexParser().apply(df)
     assert out.columns.count("sev") == 1
     assert out.collect()[0]["sev"] == "INFO"
 
 
 def test_regex_named_groups_and_miss(spark):
-    out = RegexParser(backend="pandas").apply(_lines_df(spark, [LINE, "nope"]))
+    out = RegexParser().apply(_tokens_df(spark, [LINE, "nope"]))
     got = {r["body"]: r for r in out.collect()}
     assert got[LINE]["ts"] == "2020-08-25 05:01:31"
     assert got[LINE]["sev"] == "INFO"
@@ -120,8 +115,18 @@ def test_regex_named_groups_and_miss(spark):
     assert got["nope"]["ts"] is None
 
 
+def test_non_ascii_tokens_parse(spark):
+    """Token ids 128-255 are codepoints, not bytes: the decode must
+    yield valid UTF-8 so the RE2 extract sees the line."""
+    line = "2020-08-25 05:01:31 INFO h\u00e9llo"
+    out = RegexParser().apply(_tokens_df(spark, [line])).collect()[0]
+    assert out["body"] == line
+    assert out["parsed"] is True
+    assert out["msg"] == "h\u00e9llo"
+
+
 def test_timestamp_parse(spark):
-    out = RegexParser(backend="pandas").apply(_lines_df(spark, [LINE])).collect()[0]
+    out = RegexParser().apply(_tokens_df(spark, [LINE])).collect()[0]
     assert str(out["event_ts"]) == "2020-08-25 05:01:31"
 
 
@@ -202,8 +207,7 @@ def test_out_of_range_timestamp_flagged_not_crash(spark):
     """A regex-matching line with an impossible date must yield NULL
     event_ts (ANSI to_timestamp would throw and kill the job)."""
     bad = "2020-13-45 99:99:99 ERROR impossible date"
-    out = RegexParser(backend="pandas").apply(
-        _lines_df(spark, [bad, LINE])).collect()
+    out = RegexParser().apply(_tokens_df(spark, [bad, LINE])).collect()
     got = {r["body"]: r["event_ts"] for r in out}
     assert got[bad] is None
     assert got[LINE] is not None

@@ -578,7 +578,6 @@ class _CountingParser:
             RegexParser)
         self._inner = RegexParser()
         self._acc = acc
-        self.backend = self._inner.backend
 
     def apply(self, df):
         acc = self._acc
@@ -772,47 +771,6 @@ def test_streaming_multi_sink_single_pass(spark, sf_dir, tmp_path):
         got = sorted(r["doc_id"] for r in spark.read.parquet(
             f"{tmp_path}/sinks/{sink}/batch=*").collect())
         assert got == want
-
-
-def test_streaming_multi_sink_body_backend(spark, sf_dir, tmp_path):
-    """Non-fused parser backends ('pandas'/'native') parse from a
-    ``body`` column the raw token stream doesn't carry — the fan-out
-    entrypoints must inject with_body exactly like streaming_pipeline
-    does (ADVICE r03: the guard was missing in streaming_multi_sink
-    and streaming_pipeline_fresh_dim)."""
-    from opentelemetry_collector_contrib_spark.operators.regex_parser import (
-        RegexParser)
-    from opentelemetry_collector_contrib_spark.operators.routing import (
-        DEFAULT_ROUTES)
-    from opentelemetry_collector_contrib_spark.streaming.stream_pipeline import (
-        streaming_multi_sink)
-
-    src = tmp_path / "tok_in"
-    spark.read.parquet(f"{sf_dir}/tokens.parquet").limit(500) \
-        .coalesce(1).write.parquet(str(src))
-    q = streaming_multi_sink(
-        spark, str(src), f"{sf_dir}/pods.parquet",
-        str(tmp_path / "sinks_native"), parser=RegexParser(backend="native"))
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
-    got = {s: sorted(r["doc_id"] for r in spark.read.parquet(
-               f"{tmp_path}/sinks_native/{s}/batch=*").collect())
-           for s in DEFAULT_ROUTES.all_sinks()}
-
-    # fused twin over the same input — outputs must be identical
-    q2 = streaming_multi_sink(
-        spark, str(src), f"{sf_dir}/pods.parquet",
-        str(tmp_path / "sinks_fused"), parser=RegexParser(backend="fused"))
-    try:
-        q2.processAllAvailable()
-    finally:
-        q2.stop()
-    for s in DEFAULT_ROUTES.all_sinks():
-        want = sorted(r["doc_id"] for r in spark.read.parquet(
-            f"{tmp_path}/sinks_fused/{s}/batch=*").collect())
-        assert got[s] == want
 
 
 # -- versioned snapshots (the Iceberg-commit analog) -------------------------

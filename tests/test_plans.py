@@ -112,11 +112,10 @@ def test_route_filter_prunes_partitions_on_partitioned_sink(spark, sf_dir, tmp_p
     assert re.search(r"PartitionFilters: \[.*source.*app-a", plan)
 
 
-def test_fused_parse_is_single_python_stage(spark, sf_dir):
+def test_parse_is_single_python_stage(spark, sf_dir):
     """The whole parse (detokenize + extract) is ONE Python-boundary
-    node — regression guard against the decode re-inlining that made
-    the naive plan ~6x slower.  The default 'arrow' backend shows one
-    MapInArrow node; the 'fused' backend one ArrowEvalPython."""
+    node, a MapInArrow — regression guard against the decode
+    re-inlining that made the naive plan ~6x slower."""
     df = RegexParser().apply(read_tokens(spark, f"{sf_dir}/tokens.parquet"))
     agg = df.groupBy("source", "severity_text").count()
     plan = plan_of(agg)
@@ -124,11 +123,6 @@ def test_fused_parse_is_single_python_stage(spark, sf_dir):
     # detail section — one physical node == one "(n) <Node>"
     n_arrow = len(re.findall(r"\(\d+\) (?:ArrowEvalPython|MapInArrow)", plan))
     assert n_arrow == 1
-
-    fused = RegexParser(backend="fused").apply(
-        read_tokens(spark, f"{sf_dir}/tokens.parquet"))
-    plan_f = plan_of(fused.groupBy("source", "severity_text").count())
-    assert len(re.findall(r"\(\d+\) ArrowEvalPython", plan_f)) == 1
 
 
 def test_scraper_parse_is_jvm_broadcast_only(spark):

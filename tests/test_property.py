@@ -12,7 +12,7 @@ from pyspark.sql import functions as F
 from opentelemetry_collector_contrib_spark.datapipe.dedup import _norm_words_py
 from opentelemetry_collector_contrib_spark.functions.severity import (
     convert_severity_level)
-from opentelemetry_collector_contrib_spark.functions.tokens import decode_batch
+from opentelemetry_collector_contrib_spark.functions.tokens import decode_arrow
 from opentelemetry_collector_contrib_spark.operators.statsd import parse_statsd
 
 # hypothesis drives pure-Python twins; the Spark parity for each twin
@@ -31,13 +31,18 @@ def test_severity_level_total_function(level):
         assert (text, num) == ("Undefined", 0)
 
 
-@given(st.lists(printable, max_size=20))
+@given(st.lists(st.text(max_size=40), max_size=20))
 def test_decode_batch_roundtrip(texts):
-    """encode -> decode_batch is the identity (both decode paths)."""
-    import pandas as pd
-    ascii_texts = [t.encode("ascii", "ignore").decode() for t in texts]
-    toks = pd.Series([[ord(c) for c in t] for t in ascii_texts])
-    assert list(decode_batch(toks)) == ascii_texts
+    """encode -> decode_arrow is the identity on a batch, over ASCII
+    (buffer path) and any other codepoint (per-row path), and yields
+    valid UTF-8."""
+    import pyarrow as pa
+    for batch in ([t.encode("ascii", "ignore").decode() for t in texts],
+                  texts):
+        out = decode_arrow(pa.array([[ord(c) for c in t] for t in batch],
+                                    pa.list_(pa.int32())))
+        out.validate(full=True)
+        assert out.to_pylist() == batch
 
 
 @given(printable)
