@@ -33,7 +33,9 @@ def main() -> None:
     ap.add_argument("--tokens", help="tokens table path (manifest mode)")
     ap.add_argument("--pods", help="pods dimension path (manifest mode)")
     ap.add_argument("--out", help="output dir (manifest mode)")
-    ap.add_argument("--units", type=int, default=64)
+    ap.add_argument("--units", type=int, default=64,
+                    help="manifest units of a batch run (an --incremental "
+                         "cycle is one commit unit and ignores this)")
     ap.add_argument("--salt", type=int, default=0)
     ap.add_argument("--fanout-strategy", default="auto",
                     choices=["auto", "persist", "staged"],

@@ -13,11 +13,15 @@ partition and committing one snapshot version per cycle:
 - **FileLedger** — the offsets_file analog: a jsonl of committed
   cycles, each listing the exact input files (path, bytes) it covered.
   O(cycles) metadata, inspectable with any text tool.
+- **One commit unit per cycle**: a cycle's sinks and quarantines are
+  written ``partitionBy("cycle")`` in one pass, and its Observation
+  counts (rows_in, rows_routed, per-sink sink_counts/sink_dropped) go
+  into the ledger row, so the ledger is the cycle's manifest.  A cycle
+  killed before its ledger commit re-runs whole.
 - **Deterministic cycle ids** (hash of the sorted new-file list) make a
   killed-and-retried cycle idempotent: the retry computes the same id,
-  and dynamic partition overwrite replaces the same ``cycle=<id>/
-  unit=K`` dirs instead of duplicating rows.  Within a cycle, units
-  resume via the standard RunManifest exactly like ``run_pipeline``.
+  and dynamic partition overwrite replaces the same ``cycle=<id>``
+  dir instead of duplicating rows.
 - **Orphan vacuum**: cycle dirs whose id is neither committed nor the
   current cycle (a crashed cycle superseded by new arrivals) are
   removed before writing, so sinks never accumulate uncommitted data.
@@ -39,14 +43,13 @@ from __future__ import annotations
 import hashlib
 import json
 import os
-import shutil
 import time
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
 
-from .manifest import RunManifest, unit_column
-from .pipeline import PipelineConfig, _process_units, build_lineage
+from .pipeline import (PipelineConfig, _process_units, build_lineage,
+                       drop_partitions)
 
 
 class FileLedger:
@@ -122,27 +125,6 @@ def _cycle_id(files: list[dict]) -> str:
     return h.hexdigest()[:12]
 
 
-def _vacuum_orphan_cycles(cfg: PipelineConfig, keep: set[str]) -> list[str]:
-    """Remove sink/quarantine ``cycle=*`` dirs not in ``keep`` —
-    leftovers of a crashed cycle that was superseded by new arrivals
-    (its retry would compute a different id).  Readers pinned to
-    published snapshots never saw these dirs; this just reclaims the
-    bytes and keeps raw directory listings clean."""
-    removed = []
-    roots = []
-    for sink_name in cfg.routes.all_sinks():
-        p = cfg.sink_cfg(sink_name).path
-        roots += [p, p + "__quarantine"]
-    for root in roots:
-        if not os.path.isdir(root):
-            continue
-        for d in os.listdir(root):
-            if d.startswith("cycle=") and d.split("=", 1)[1] not in keep:
-                shutil.rmtree(os.path.join(root, d), ignore_errors=True)
-                removed.append(os.path.join(root, d))
-    return removed
-
-
 def _heal_unpublished_snapshots(cfg: PipelineConfig,
                                 ledger: FileLedger) -> int:
     """Close the crash window between the ledger commit and the
@@ -189,46 +171,31 @@ def run_pipeline_incremental(spark: SparkSession, cfg: PipelineConfig,
                 "files_total": len(all_files),
                 "snapshots_healed": healed}
     cycle = _cycle_id(new)
-    _vacuum_orphan_cycles(cfg, keep=ledger.committed_cycles() | {cycle})
+    # orphan vacuum: cycle dirs of a crashed cycle that was superseded
+    # by new arrivals (its retry computes a different id).  Pinned
+    # readers never saw them; this reclaims the bytes.
+    keep = ledger.committed_cycles() | {cycle}
+    drop_partitions(cfg, "cycle", lambda c: c not in keep)
 
-    # size the fan-out strategy by the increment, not the whole table
-    cfg.input_bytes_hint = sum(f["bytes"] for f in new)
     df = (spark.read.option("basePath", cfg.tokens_path)
           .parquet(*[f["path"] for f in new]))
-    lineage = (build_lineage(spark, cfg, df=df)
-               .withColumn("unit", unit_column(cfg.n_units))
-               .withColumn("cycle", F.lit(cycle)))
-
-    # per-unit resume WITHIN the cycle: same manifest contract as
-    # run_pipeline, scoped to this cycle's directory
-    manifest = RunManifest(os.path.join(cfg.out_dir, "_manifest",
-                                        f"cycle_{cycle}"), run_id=cycle)
-    done = manifest.completed_units()
-    pending = [u for u in range(cfg.n_units) if u not in done]
-    rows_in = rows_routed = 0
-    if pending:
-        metrics = _process_units(
-            lineage.filter(F.col("unit").isin(pending)), cfg, pending,
-            partition_cols=["cycle", "unit"],
-            partition_values={"cycle": cycle})
-        for u in pending:
-            manifest.record(u, metrics[u])
-    for e in manifest.entries():
-        rows_in += e.get("rows_in", 0)
-        rows_routed += e.get("rows_routed", 0)
+    lineage = build_lineage(spark, cfg, df=df).withColumn("cycle",
+                                                          F.lit(cycle))
+    # size the fan-out strategy by the increment, not the whole table
+    metrics = _process_units(lineage, cfg, "cycle", [cycle],
+                             input_bytes=sum(f["bytes"] for f in new))[cycle]
 
     if fail_before_commit:
         return {"status": "killed", "cycle_id": cycle}
 
-    ledger.commit_cycle(cycle, new, {"rows_in": rows_in,
-                                     "rows_routed": rows_routed})
+    ledger.commit_cycle(cycle, new, metrics)
     from ..sinks.maintenance import publish_snapshot
     for sink_name in cfg.routes.all_sinks():
         publish_snapshot(cfg.sink_cfg(sink_name).path, run_id=cycle,
                          extra={"sink": sink_name, "cycle": cycle})
     return {"status": "complete", "cycle_id": cycle,
-            "files_processed": len(new), "rows_in": rows_in,
-            "rows_routed": rows_routed}
+            "files_processed": len(new), "rows_in": metrics["rows_in"],
+            "rows_routed": metrics["rows_routed"]}
 
 
 def expire_cycles(cfg: PipelineConfig, keep_last: int = 0,
@@ -252,18 +219,7 @@ def expire_cycles(cfg: PipelineConfig, keep_last: int = 0,
             (live[:-keep_last] if keep_last > 0 else live)}
     if not drop:
         return {"expired_cycles": [], "dirs_removed": 0}
-    removed = 0
-    for sink_name in cfg.routes.all_sinks():
-        p = cfg.sink_cfg(sink_name).path
-        for root in (p, p + "__quarantine"):
-            if not os.path.isdir(root):
-                continue
-            for d in os.listdir(root):
-                if (d.startswith("cycle=")
-                        and d.split("=", 1)[1] in drop):
-                    shutil.rmtree(os.path.join(root, d),
-                                  ignore_errors=True)
-                    removed += 1
+    removed = drop_partitions(cfg, "cycle", drop.__contains__)
     ledger.mark_expired(drop)
     survivors = [e["cycle_id"] for e in ledger.entries()
                  if not e.get("expired")]

@@ -12,13 +12,19 @@ value).  Each completed unit appends one manifest row:
 
 A resumed run reads the manifest, and processes only units without a
 'done' row — the read-side anti-join.  Sink writes go to per-unit
-subdirectories, so completed units are never rewritten (idempotent) and
-a kill between units loses at most the in-flight unit.
+``unit=K`` subdirectories under dynamic overwrite, so completed units
+are never rewritten (idempotent).
 
-Scale notes: the manifest is O(units) rows (thousands), written
-per-unit; at 10^12 input rows the unit count is chosen so one unit is
-~10-100 GB — small enough to retry cheaply, large enough that manifest
-overhead vanishes.
+Resume granularity: ``run_pipeline`` writes ALL pending units in one
+pass per sink and records them only after the last sink is written,
+so a run killed part-way records no unit and re-runs whole.  Only a
+run split on purpose (the ``fail_after_units`` test hook) leaves some
+units done and others pending.  An ingest cycle (plans/incremental.py)
+does not use this manifest: its FileLedger row is the cycle's commit
+record and carries the same counts.
+
+Scale notes: the manifest is O(units) rows (thousands), appended when
+a run's writes finish.
 """
 
 from __future__ import annotations

@@ -23,6 +23,8 @@ in the session for the join side.
 
 from __future__ import annotations
 
+import os
+import shutil
 import time
 from dataclasses import dataclass, field
 
@@ -48,10 +50,9 @@ class PipelineConfig:
     routes: RoutingTable = field(default_factory=lambda: DEFAULT_ROUTES)
     parser: RegexParser = field(default_factory=RegexParser)
     sinks: dict[str, SinkConfig] = field(default_factory=dict)
-    n_units: int = 8               # manifest granularity
+    n_units: int = 8               # manifest granularity (run_pipeline)
     salt_partitions: int = 0       # >0: salted repartition before writes
-    single_pass: bool = True       # one parse pass across sinks
-    # how single_pass avoids the N-sink re-parse:
+    # how a multi-sink fan-out parses the input once for all sinks:
     #  "persist" — cache the routed lineage MEMORY_AND_DISK (serialized;
     #     costs ~input-sized executor cache, zero extra write);
     #  "staged"  — write the routed rows ONCE partitionBy(sink) to
@@ -73,10 +74,6 @@ class PipelineConfig:
     # stage — a task writing partitionBy(unit) holds one open row-group
     # buffer per unit value it sees (SinkConfig.parquet_block_bytes).
     sink_parquet_block_bytes: int | None = None
-    # bytes actually being processed this run, when different from the
-    # tokens_path total (incremental ingest sets this to the new-file
-    # sum so the auto fan-out strategy sizes by the increment)
-    input_bytes_hint: int | None = None
 
     def sink_cfg(self, name: str) -> SinkConfig:
         if name not in self.sinks:
@@ -103,9 +100,9 @@ def build_lineage(spark: SparkSession, cfg: PipelineConfig,
 ATTR_COLS = ["source", "severity_text", "namespace", "deployment", "pod_name"]
 
 
-def _unit_count_aggs(units: list[int]) -> list:
-    return [F.coalesce(F.sum(F.when(F.col("unit") == u, 1).otherwise(0)),
-                       F.lit(0)).alias(f"u{u}") for u in units]
+def _unit_count_aggs(part_col: str, values: list) -> list:
+    return [F.coalesce(F.sum(F.when(F.col(part_col) == v, 1).otherwise(0)),
+                       F.lit(0)).alias(f"u{v}") for v in values]
 
 
 # cached-routed-lineage footprint per input parquet byte: parquet
@@ -115,7 +112,8 @@ def _unit_count_aggs(units: list[int]) -> list:
 _CACHE_BYTES_PER_INPUT_BYTE = 4
 
 
-def _auto_fanout_strategy(spark: SparkSession, cfg: PipelineConfig) -> str:
+def _auto_fanout_strategy(spark: SparkSession, cfg: PipelineConfig,
+                          input_bytes: int | None = None) -> str:
     """Pick the single-pass fan-out strategy from the input size.
 
     persist (cache the routed lineage) wins while the cache fits the
@@ -127,13 +125,10 @@ def _auto_fanout_strategy(spark: SparkSession, cfg: PipelineConfig) -> str:
     storageFraction x live executors; fall back to staged when the
     input can't be stat'ed (unknown size = assume big).
 
-    ``cfg.input_bytes_hint`` (when set) overrides the stat — the
-    incremental ingest mode processes only NEW files of a much larger
-    table, so sizing by the full table would wrongly force staged for
-    a small increment."""
-    if cfg.input_bytes_hint is not None:
-        input_bytes = cfg.input_bytes_hint
-    else:
+    ``input_bytes`` (when given) overrides the stat — an ingest cycle
+    processes only NEW files of a much larger table, so sizing by the
+    full table would wrongly force staged for a small increment."""
+    if input_bytes is None:
         try:
             jpath = spark._jvm.org.apache.hadoop.fs.Path(cfg.tokens_path)
             fs = jpath.getFileSystem(spark._jsc.hadoopConfiguration())
@@ -159,19 +154,22 @@ def _auto_fanout_strategy(spark: SparkSession, cfg: PipelineConfig) -> str:
     return "persist" if est_cache <= storage_bytes else "staged"
 
 
-def _process_units(df: DataFrame, cfg: PipelineConfig,
-                   units: list[int],
-                   partition_cols: list[str] | None = None,
-                   partition_values: dict | None = None) -> dict[int, dict]:
-    """ONE pass over the pending units per sink: the branch is written
-    ``partitionBy("unit")`` under the sink root, so the parse+enrich
-    compute runs once regardless of how many units are pending (the
-    old per-unit loop re-scanned the input n_units times).  Dynamic
-    partition-overwrite replaces only the written ``unit=K`` dirs —
-    completed units from earlier runs are never touched.
+def _process_units(df: DataFrame, cfg: PipelineConfig, part_col: str,
+                   values: list,
+                   input_bytes: int | None = None) -> dict:
+    """ONE pass over the values being written, per sink: the branch is
+    written ``partitionBy(part_col)`` under the sink root, so the
+    parse+enrich compute runs once regardless of how many values are
+    pending (the old per-unit loop re-scanned the input n_units times).
+    Dynamic partition-overwrite replaces only the written dirs — the
+    pending ``unit=K`` dirs of a batch run (``part_col="unit"``) or
+    the one ``cycle=<id>`` dir of an ingest cycle (``"cycle"``);
+    completed units and other cycles are never touched.  Returns the
+    metrics per written value.  ``input_bytes`` sizes the auto fan-out
+    strategy (default: the ``tokens_path`` total).
 
-    Single-pass fan-out (``cfg.single_pass``, default on): the routed
-    lineage is PERSISTED before the per-sink loop, so the scan + Arrow
+    Single-pass fan-out: with more than one sink the routed lineage is
+    PERSISTED (or staged) before the per-sink loop, so the scan + Arrow
     parse + enrich run ONCE total, exactly like the reference pushing
     one batch to N exporters (processor/routingprocessor/routing.go:
     152-161 consumes each incoming batch once for all routes).  The
@@ -184,7 +182,7 @@ def _process_units(df: DataFrame, cfg: PipelineConfig,
     full re-parses.  Unpersisted in the ``finally`` below.
 
     All metrics are collected with ``Observation`` aggregates ON the
-    write pass itself: per-unit input counts observe the pre-fan-out
+    write pass itself: per-value input counts observe the pre-fan-out
     lineage, per-sink routed counts observe each sink branch.  (The
     round-1 version re-read every sink's written parquet and ran a
     count_distinct over their union — a second full output scan plus a
@@ -192,27 +190,27 @@ def _process_units(df: DataFrame, cfg: PipelineConfig,
     when a sink routed zero rows or kept no doc_id column.)"""
     from pyspark.sql import Observation
     t0 = time.time()
-    # one set of per-unit count columns for every Observation below:
-    # each costs ~8 py4j round trips to build, per unit
-    aggs = _unit_count_aggs(units)
+    # one set of per-value count columns for every Observation below:
+    # each costs ~8 py4j round trips to build, per value
+    aggs = _unit_count_aggs(part_col, values)
     # input-side counts: one row per doc pre-fan-out, so a plain
-    # conditional count per unit == distinct docs routed anywhere
+    # conditional count per value == distinct docs routed anywhere
     # (misses take the default route).  Fires with the first write.
     in_obs = Observation()
     df = df.observe(in_obs, *aggs)
     persisted = None
     staging = None
     staged_col = None
-    if cfg.single_pass and len(cfg.routes.all_sinks()) > 1:
+    if len(cfg.routes.all_sinks()) > 1:
         strategy = cfg.fanout_strategy
         if strategy == "auto":
-            strategy = _auto_fanout_strategy(df.sparkSession, cfg)
+            strategy = _auto_fanout_strategy(df.sparkSession, cfg,
+                                             input_bytes)
         if strategy == "staged":
             # write-once fan-out: the routed rows land partitionBy(sink)
             # on durable storage (the in_obs counts ride this action);
             # each branch below re-reads its own partition-pruned slice
             # — no cache, one extra write.
-            import os
             spark = df.sparkSession
             # NOT underscore-prefixed: hidden-path roots are only
             # incidentally readable when passed directly (Hadoop's
@@ -234,59 +232,45 @@ def _process_units(df: DataFrame, cfg: PipelineConfig,
             from pyspark import StorageLevel
             df = df.persist(StorageLevel.MEMORY_AND_DISK)
             persisted = df
-    per_sink: dict[str, dict[int, int]] = {}
-    dropped: dict[str, dict[int, int]] = {}
     branch_obs: dict[str, "Observation"] = {}
     drop_obs: dict[str, "Observation"] = {}
     try:
-        _write_sink_branches(df, cfg, units, aggs, branch_obs, drop_obs,
-                             staged_col=staged_col,
-                             partition_cols=partition_cols,
-                             partition_values=partition_values)
-        for sink_name, obs in branch_obs.items():
-            got = obs.get
-            per_sink[sink_name] = {u: int(got[f"u{u}"]) for u in units}
-        for sink_name, obs in drop_obs.items():
-            got = obs.get
-            dropped[sink_name] = {u: int(got[f"u{u}"]) for u in units}
+        _write_sink_branches(df, cfg, part_col, values, aggs, branch_obs,
+                             drop_obs, staged_col=staged_col)
+        per_sink = {s: obs.get for s, obs in branch_obs.items()}
+        dropped = {s: obs.get for s, obs in drop_obs.items()}
         rows_in_got = in_obs.get
     finally:
         if persisted is not None:
             persisted.unpersist()
         if staging is not None:
-            import shutil
             shutil.rmtree(staging, ignore_errors=True)
-    rows_in_per_unit = {u: int(rows_in_got[f"u{u}"]) for u in units}
     wall_ms = int((time.time() - t0) * 1000)
-    out: dict[int, dict] = {}
-    for u in units:
-        counts = {s: per_sink[s].get(u, 0) for s in per_sink}
-        drops = {s: dropped[s].get(u, 0) for s in dropped
-                 if dropped[s].get(u, 0)}
-        out[u] = {"rows_in": rows_in_per_unit.get(u, 0),
+    out = {}
+    for v in values:
+        counts = {s: int(got[f"u{v}"]) for s, got in per_sink.items()}
+        drops = {s: int(got[f"u{v}"]) for s, got in dropped.items()
+                 if got[f"u{v}"]}
+        out[v] = {"rows_in": int(rows_in_got[f"u{v}"]),
                   "rows_routed": sum(counts.values()),
                   "sink_counts": str(counts),
                   "sink_dropped": str(drops),
-                  "wall_ms": wall_ms // max(len(units), 1)}
+                  "wall_ms": wall_ms // max(len(values), 1)}
     return out
 
 
 def _write_sink_branches(df: DataFrame, cfg: PipelineConfig,
-                         units: list[int], aggs: list,
+                         part_col: str, values: list, aggs: list,
                          branch_obs: dict, drop_obs: dict,
-                         staged_col: str | None = None,
-                         partition_cols: list[str] | None = None,
-                         partition_values: dict | None = None) -> None:
+                         staged_col: str | None = None) -> None:
     """The per-sink write loop over the (persisted or staged) routed
-    lineage.  ``staged_col`` set means ``df`` is the re-read staging
-    table partitioned by that column — the equality filter prunes to
-    the sink's own files instead of scanning the array column.
-    ``partition_cols`` extends the sink layout beyond the default
-    ``unit`` (incremental ingest adds a leading ``cycle``).  ``aggs``
-    are the caller's ``_unit_count_aggs(units)``, observed on every
-    branch."""
+    lineage, each branch written ``partitionBy(part_col)``.
+    ``staged_col`` set means ``df`` is the re-read staging table
+    partitioned by that column — the equality filter prunes to the
+    sink's own files instead of scanning the array column.  ``aggs``
+    are the caller's ``_unit_count_aggs(part_col, values)``, observed
+    on every branch."""
     from pyspark.sql import Observation
-    partition_cols = partition_cols or ["unit"]
     for sink_name in cfg.routes.all_sinks():
         sink = cfg.sink_cfg(sink_name)
         if staged_col is not None:
@@ -295,41 +279,53 @@ def _write_sink_branches(df: DataFrame, cfg: PipelineConfig,
         else:
             branch = df.filter(F.array_contains(F.col("sinks"), sink_name))
         branch = serialize_records(branch, sink, attr_cols=ATTR_COLS)
-        out_cols = [*partition_cols, "doc_id", "tokens", "n_tok", "payload",
+        out_cols = [part_col, "doc_id", "tokens", "n_tok", "payload",
                     "metadata_signature", *ATTR_COLS]
         branch = branch.select(*[c for c in out_cols if c in branch.columns])
         if sink.max_payload_bytes is not None or sink.required_attrs:
             # partial-error analog (exporter.go:99-108): constraint
-            # violations quarantine per-unit instead of failing the
-            # unit; reprocess_quarantine re-sends only those rows.
+            # violations quarantine per partition instead of failing
+            # it; reprocess_quarantine re-sends only those rows.
             # (One extra action for the quarantine branch — only when
             # constraints are configured on the sink.)
             branch, bad = split_valid(branch, sink)
             dobs = Observation()
             bad = bad.observe(dobs, *aggs)
             # dynamic overwrite only rewrites partitions PRESENT in the
-            # data — a re-run whose unit now quarantines zero rows would
-            # leave the stale unit=K dir behind (and a later retry would
-            # re-send already-shipped rows), so clear pending units first
-            import shutil
+            # data — a re-run whose partition now quarantines zero rows
+            # would leave its stale dir behind (and a later retry would
+            # re-send already-shipped rows), so clear the written ones
             qp = quarantine_path(sink)
-            # with a leading cycle partition, clear only this run's
-            # pending unit dirs under it, never other cycles'
-            prefix = "/".join(f"{c}={partition_values[c]}"
-                              for c in partition_cols if c != "unit")
-            base = f"{qp}/{prefix}" if prefix else qp
-            for u in units:
-                shutil.rmtree(f"{base}/unit={u}", ignore_errors=True)
+            for v in values:
+                shutil.rmtree(f"{qp}/{part_col}={v}", ignore_errors=True)
             bad.write.mode("overwrite") \
                 .option("partitionOverwriteMode", "dynamic") \
-                .partitionBy(*partition_cols).parquet(qp)
+                .partitionBy(part_col).parquet(qp)
             drop_obs[sink_name] = dobs
         obs = Observation()
         branch = branch.observe(obs, *aggs)
         if cfg.salt_partitions:
             branch = salted_repartition(branch, "source", cfg.salt_partitions)
-        write_sink(branch, sink, partition_cols=partition_cols)
+        write_sink(branch, sink, partition_cols=[part_col])
         branch_obs[sink_name] = obs
+
+
+def drop_partitions(cfg: PipelineConfig, part_col: str, drop) -> int:
+    """Remove every ``part_col=<value>`` dir under each sink and
+    quarantine root whose value ``drop(value)`` accepts; metadata such
+    as ``_snapshots/`` never matches.  Returns the number removed."""
+    removed = 0
+    for sink_name in cfg.routes.all_sinks():
+        sink = cfg.sink_cfg(sink_name)
+        for root in (sink.path, quarantine_path(sink)):
+            if not os.path.isdir(root):
+                continue
+            for d in os.listdir(root):
+                col, _, value = d.partition("=")
+                if col == part_col and drop(value):
+                    shutil.rmtree(os.path.join(root, d), ignore_errors=True)
+                    removed += 1
+    return removed
 
 
 def run_pipeline(spark: SparkSession, cfg: PipelineConfig,
@@ -345,6 +341,11 @@ def run_pipeline(spark: SparkSession, cfg: PipelineConfig,
         "unit", unit_column(cfg.n_units))
     done = manifest.completed_units()
     pending = [u for u in range(cfg.n_units) if u not in done]
+    if not done:
+        # a fresh run owns the layout: partitioned overwrites are
+        # dynamic (resume semantics), so a unit=K dir of an earlier run
+        # with more units would otherwise survive next to the new ones
+        drop_partitions(cfg, "unit", lambda _v: True)
     killed = False
     if fail_after_units is not None and fail_after_units < len(pending):
         # simulate a mid-run kill: complete only the first K pending
@@ -352,7 +353,8 @@ def run_pipeline(spark: SparkSession, cfg: PipelineConfig,
         pending, killed = pending[:fail_after_units], True
     if pending:
         metrics = _process_units(
-            lineage.filter(F.col("unit").isin(pending)), cfg, pending)
+            lineage.filter(F.col("unit").isin(pending)), cfg, "unit",
+            pending)
         for unit in pending:
             manifest.record(unit, metrics[unit])
     if killed:
@@ -389,7 +391,7 @@ def aggregate_manifest(spark: SparkSession, cfg: PipelineConfig) -> DataFrame:
         if not sink_has_data(sink.path):
             continue
         # partition discovery handles both layouts (unit=K and the
-        # incremental cycle=<id>/unit=K); _-prefixed metadata is ignored
+        # incremental cycle=<id>); _-prefixed metadata is ignored
         df = spark.read.parquet(sink.path)
         frames.append(df.groupBy("source", "severity_text")
                         .agg(F.count(F.lit(1)).alias("n"))

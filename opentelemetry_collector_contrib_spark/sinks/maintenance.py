@@ -35,7 +35,7 @@ def dir_bytes(path: str) -> int:
 
 def _partition_cols_on_disk(path: str) -> list[str]:
     """The hive-style partition column chain actually present under
-    ``path`` (e.g. ['cycle', 'unit']), by walking the first `col=value`
+    ``path`` (e.g. ['unit'] or ['cycle']), by walking the first `col=value`
     subdir at each level."""
     cols: list[str] = []
     probe = path
@@ -74,7 +74,7 @@ def compact(spark: SparkSession, path: str,
     writer = df.write.mode("overwrite")
     if part_cols:
         # preserve the on-disk partition layout (unit=K, or the
-        # incremental cycle=<id>/unit=K): writing flat files next to
+        # incremental cycle=<id>): writing flat files next to
         # partition dirs would leave a mixed layout later appends can't
         # coexist with ("conflicting directory structures")
         writer = writer.partitionBy(*part_cols)

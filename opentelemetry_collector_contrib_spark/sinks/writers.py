@@ -239,7 +239,8 @@ def write_sink(df: DataFrame, cfg: SinkConfig,
         if mode == "overwrite":
             # resume/append semantics REQUIRE replacing only the
             # partitions present in this write (a retried unit, a new
-            # cycle) — never siblings.  Pin it per-write: the writer
+            # cycle) — never siblings; a fresh run_pipeline clears the
+            # old unit=K dirs itself first.  Pin it per-write: the writer
             # option overrides the session conf, so the behavior no
             # longer depends on who built the SparkSession (the driver's
             # default-STATIC session wiped committed cycle=… dirs in

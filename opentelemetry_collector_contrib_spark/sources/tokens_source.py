@@ -11,8 +11,8 @@ Scale notes:
 - The scan is a plain columnar read: column pruning + predicate pushdown
   reach the parquet/Iceberg scan via Catalyst (verified in tests by
   checking PushedFilters in the physical plan).
-- ``with_body`` keeps detokenization inside Catalyst (TRANSFORM + CHAR
-  + ARRAY_JOIN — zero Python).  The regex parse stage does not need it:
+- ``with_body`` keeps detokenization inside Catalyst (TRANSFORM + HEX
+  + UNHEX + DECODE — zero Python).  The regex parse stage does not need it:
   it detokenizes inside its own Arrow hop
   (``operators/regex_parser.py``).
 """
@@ -67,7 +67,9 @@ def read_tokens(spark: SparkSession, path: str, fmt: str = "parquet") -> DataFra
 def with_body(df: DataFrame) -> DataFrame:
     """Add ``body`` = detokenized log line.  ``tokens`` is carried
     through untouched (the per-row token-array-equality invariant)."""
-    # pure Catalyst: codepoint -> char, join.  CHAR is mod-256 in Spark,
-    # safe for our ASCII vocab.
-    body = F.array_join(F.transform(F.col("tokens"), lambda t: F.char(t)), "")
-    return df.withColumn("body", body)
+    # pure Catalyst: each codepoint -> 8 hex digits, i.e. one UTF-32
+    # (big-endian) code unit, then one decode of the joined bytes.
+    # Spark's CHAR would be mod-256 and mangle every id above 255.
+    hexed = F.array_join(
+        F.transform(F.col("tokens"), lambda t: F.lpad(F.hex(t), 8, "0")), "")
+    return df.withColumn("body", F.decode(F.unhex(hexed), "UTF-32"))

@@ -76,9 +76,9 @@ def test_incremental_cycles_append_and_time_travel(spark, sf_dir, tmp_path):
 
 def test_incremental_retry_is_idempotent(spark, sf_dir, tmp_path):
     """A cycle killed after its sink writes but before the ledger
-    commit retries with the SAME deterministic cycle id: dynamic
-    overwrite replaces the same cycle=<id>/unit=K dirs (no duplicate
-    rows) and the within-cycle unit manifest skips completed units."""
+    commit retries with the SAME deterministic cycle id and re-runs
+    whole: dynamic overwrite replaces the same cycle=<id> dir (no
+    duplicate rows)."""
     in_dir, n_a, _ = _split_tokens(spark, sf_dir, tmp_path)
     cfg = _inc_cfg(in_dir, sf_dir, tmp_path / "out")
 
@@ -90,9 +90,81 @@ def test_incremental_retry_is_idempotent(spark, sf_dir, tmp_path):
     done = run_pipeline_incremental(spark, cfg2)
     assert done["status"] == "complete"
     assert done["cycle_id"] == killed["cycle_id"]
-    assert done["rows_in"] == n_a                    # manifest-carried
+    assert done["rows_in"] == n_a                    # whole cycle re-run
     docs = _sink_docs(spark, cfg2.sink_cfg("sumologic").path)
     assert len(docs) == len(set(docs))               # no duplicates
+
+
+def test_cycle_is_one_partition_level_and_ledger_row(spark, sf_dir,
+                                                     tmp_path):
+    """An ingest cycle is one commit unit: every sink and quarantine
+    root holds only cycle=<id>/ dirs with the data files directly
+    inside, no per-cycle unit manifest is written, and the ledger row
+    carries the counts each sink holds for the cycle."""
+    import ast
+    from opentelemetry_collector_contrib_spark.sinks.writers import (
+        quarantine_path)
+    in_dir, n_a, _ = _split_tokens(spark, sf_dir, tmp_path)
+    cfg = _inc_cfg(in_dir, sf_dir, tmp_path / "out")
+    cfg.sink_cfg("sumologic").max_payload_bytes = 60   # some quarantine
+    r = run_pipeline_incremental(spark, cfg)
+    cycle = r["cycle_id"]
+    (row,) = FileLedger(f"{cfg.out_dir}/_ingest_ledger").entries()
+    assert (row["rows_in"], row["rows_routed"]) == (n_a, r["rows_routed"])
+    counts = ast.literal_eval(row["sink_counts"])
+    dropped = ast.literal_eval(row["sink_dropped"])
+    assert set(counts) == set(SINKS) and dropped["sumologic"] > 0
+
+    roots = {s: cfg.sink_cfg(s).path for s in SINKS}
+    roots["quarantine"] = quarantine_path(cfg.sink_cfg("sumologic"))
+    for name, root in roots.items():
+        assert [d for d in os.listdir(root)
+                if not d.startswith(("_", "."))] == [f"cycle={cycle}"]
+        part = os.path.join(root, f"cycle={cycle}")
+        entries = os.listdir(part)
+        assert not any(os.path.isdir(os.path.join(part, e))
+                       for e in entries)
+        assert any(e.endswith(".parquet") for e in entries)
+        held = spark.read.parquet(part).count()
+        want = dropped["sumologic"] if name == "quarantine" else counts[name]
+        assert held == want
+    manifest_dir = os.path.join(cfg.out_dir, "_manifest")
+    assert not (os.path.isdir(manifest_dir)
+                and any(d.startswith("cycle_")
+                        for d in os.listdir(manifest_dir)))
+
+
+def test_cycle_sizes_fanout_by_increment_and_leaves_cfg(spark, sf_dir,
+                                                        tmp_path,
+                                                        monkeypatch):
+    """The auto fan-out strategy is sized by the cycle's new files, not
+    the whole table, and the cycle does not write that size (or
+    anything else) into the caller's config, which a later batch
+    run_pipeline would otherwise size by."""
+    import copy
+    from opentelemetry_collector_contrib_spark.plans import pipeline as P
+    sized = []
+    real = P._auto_fanout_strategy
+
+    def recording(*args):
+        sized.append(args[2:])               # (input_bytes,) when given
+        return real(*args)
+    monkeypatch.setattr(P, "_auto_fanout_strategy", recording)
+
+    in_dir, _, b = _split_tokens(spark, sf_dir, tmp_path)
+    cfg = _inc_cfg(in_dir, sf_dir, tmp_path / "out")
+    for s in SINKS:
+        cfg.sink_cfg(s)
+    before = {**vars(cfg), "sinks": copy.deepcopy(cfg.sinks)}
+    run_pipeline_incremental(spark, cfg)
+    b.write.mode("append").parquet(in_dir)
+    run_pipeline_incremental(spark, cfg)
+    assert vars(cfg) == before
+
+    ledger = FileLedger(f"{cfg.out_dir}/_ingest_ledger").entries()
+    assert sized == [(sum(f["bytes"] for f in e["files"]),) for e in ledger]
+    table = sum(f["bytes"] for f in list_input_files(spark, in_dir))
+    assert sized[-1][0] < table
 
 
 def test_incremental_vacuums_orphan_cycles(spark, sf_dir, tmp_path):
@@ -151,7 +223,7 @@ def test_list_input_files_skips_hidden(spark, tmp_path):
 
 def test_aggregate_manifest_over_cycle_layout(spark, sf_dir, tmp_path):
     """aggregate_manifest's verification frame works over the
-    incremental cycle=<id>/unit=K sink layout too."""
+    incremental cycle=<id> sink layout too."""
     from opentelemetry_collector_contrib_spark.plans.pipeline import (
         aggregate_manifest)
     in_dir, n_a, _ = _split_tokens(spark, sf_dir, tmp_path)
@@ -252,7 +324,7 @@ def test_quarantine_retry_under_cycle_layout(spark, sf_dir, tmp_path):
 
     sink.max_payload_bytes = 10_000_000          # relax -> all pass now
     moved = reprocess_quarantine(spark, sink,
-                                 partition_cols=["cycle", "unit"])
+                                 partition_cols=["cycle"])
     assert moved == n_q
     sunk = spark.read.parquet(sink.path)
     assert sunk.count() == n_sunk + n_q
@@ -260,8 +332,8 @@ def test_quarantine_retry_under_cycle_layout(spark, sf_dir, tmp_path):
 
 
 def test_compact_preserves_cycle_layout(spark, sf_dir, tmp_path):
-    """Compacting an incremental sink keeps its cycle=<id>/unit=K
-    partition layout, so later cycles append cleanly (flat files next
+    """Compacting an incremental sink keeps its cycle=<id> partition
+    layout, so later cycles append cleanly (flat files next
     to partition dirs would be an unreadable mixed layout)."""
     from opentelemetry_collector_contrib_spark.sinks.maintenance import (
         compact)
@@ -316,7 +388,7 @@ def test_compact_pinned_read_equality_and_version_sweep(spark, sf_dir,
     pinned = sorted(map(tuple, read_pinned(spark, p)
                         .select("doc_id", "cycle", "n_tok").collect()))
     assert pinned == before
-    # the snapshot metadata never grows (at toy scale each cycle=/unit=
+    # the snapshot metadata never grows (at toy scale each cycle=
     # partition may already be a single file; the coalesce is a no-op)
     assert read_snapshot(p, v_cur)["n_files"] \
         <= read_snapshot(p, v_pre)["n_files"]

@@ -67,11 +67,30 @@ def test_parse_matches_duckdb_re2(spark, sf_dir):
     out = RegexParser().apply(with_body(df).withColumnRenamed("body", "wb"))
     got = out.select("wb", "body", "parsed", "ts", "sev", "msg").collect()
     assert len(got) == df.count()
-    assert all(r["wb"] == r["body"] for r in got if r["body"].isascii())
+    assert all(r["wb"] == r["body"] for r in got)
     want = _duckdb_parse(r["body"] for r in got)
     assert {r["body"]: tuple(r[2:]) for r in got} == want
     assert {r["body"] for r in got} >= set(edge)
     assert 0 < sum(r["parsed"] for r in got) < len(got)
+
+
+def test_with_body_decodes_wide_codepoints(spark):
+    """Catalyst with_body, the parser's decode_arrow and DuckDB's chr
+    (the gate oracle's decode) agree on codepoints above 255, where a
+    mod-256 CHAR would turn each into a different character."""
+    import pyarrow as pa
+    from opentelemetry_collector_contrib_spark.functions.tokens import (
+        DECODE_SQL_DUCKDB, decode_arrow)
+    lines = ["h\u00e9llo \u4e16\u754c\U0001F600", LINE]
+    toks = [[ord(c) for c in l] for l in lines]
+    df = spark.createDataFrame(list(enumerate(toks)),
+                               "i int, tokens array<int>")
+    spark_body = [r["body"] for r in with_body(df).orderBy("i").collect()]
+    arrow_body = decode_arrow(pa.array(toks, pa.list_(pa.int32())))
+    (duck_body,) = duckdb.connect().execute(
+        "SELECT list_transform(?::INT[][], tok -> "
+        f"{DECODE_SQL_DUCKDB.format(col='tok')})", [toks]).fetchone()
+    assert spark_body == arrow_body.to_pylist() == duck_body == lines
 
 
 def test_arrow_backend_falls_back_on_re2_reject():

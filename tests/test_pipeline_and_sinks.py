@@ -200,6 +200,35 @@ def test_quarantine_rerun_clears_stale_unit_partitions(spark, sf_dir, tmp_path):
     assert not has_rows
 
 
+def test_fresh_run_clears_stale_unit_partitions(spark, sf_dir, tmp_path):
+    """A run that starts with no completed units owns the layout: a
+    fresh manifest over an out_dir written with MORE units leaves only
+    the new unit=K dirs in every sink and quarantine root (dynamic
+    overwrite alone kept unit=2/unit=3 next to them), and the sinks'
+    snapshot history survives."""
+    from opentelemetry_collector_contrib_spark.sinks.writers import (
+        quarantine_path)
+    out = str(tmp_path / "out")
+    for n_units, manifest in ((4, None),
+                              (2, RunManifest(str(tmp_path / "m2")))):
+        cfg = _cfg(sf_dir, out, n_units=n_units)
+        cfg.sink_cfg("sumologic").max_payload_bytes = 60
+        assert run_pipeline(spark, cfg, manifest=manifest)["status"] == \
+            "complete"
+    def parts(root):
+        return sorted(d for d in os.listdir(root)
+                      if not d.startswith(("_", ".")))
+    for sink in ("sumologic", "loki", "default-sink"):
+        p = cfg.sink_cfg(sink).path
+        assert parts(p) == ["unit=0", "unit=1"]
+        assert os.path.isdir(f"{p}/_snapshots")
+        docs = [r["doc_id"] for r in
+                spark.read.parquet(p).select("doc_id").collect()]
+        assert docs and len(docs) == len(set(docs))
+    qp = quarantine_path(cfg.sink_cfg("sumologic"))
+    assert parts(qp) == ["unit=0", "unit=1"]
+
+
 def test_unit_column_stable(spark):
     df = spark.createDataFrame([(f"doc-{i}",) for i in range(50)],
                                "doc_id string")
@@ -591,10 +620,8 @@ class _CountingParser:
 
 
 def test_single_pass_fanout_scans_input_once(spark, sf_dir, tmp_path):
-    """With single_pass (default) the routed lineage is persisted, so
-    the scan + Arrow parse run ONCE for all 3 sinks; with it off, each
-    sink's write action recomputes the full lineage (3x the parse
-    work).  Outputs must be identical either way."""
+    """The routed lineage is persisted (or staged) before the sink
+    loop, so the scan + Arrow parse run ONCE for all 3 sinks."""
     n_rows = spark.read.parquet(f"{sf_dir}/tokens.parquet").count()
 
     acc1 = spark.sparkContext.accumulator(0)
@@ -603,18 +630,6 @@ def test_single_pass_fanout_scans_input_once(spark, sf_dir, tmp_path):
     res = run_pipeline(spark, cfg1)
     assert res["status"] == "complete" and res["rows_in"] == n_rows
     assert acc1.value == n_rows          # ONE parse pass, 3 sinks
-
-    acc2 = spark.sparkContext.accumulator(0)
-    cfg2 = _cfg(sf_dir, str(tmp_path / "multi"), n_units=2)
-    cfg2.parser = _CountingParser(acc2)
-    cfg2.single_pass = False
-    run_pipeline(spark, cfg2)
-    assert acc2.value == 3 * n_rows      # the round-2 behavior: 1 pass/sink
-
-    for sink in ("sumologic", "loki", "default-sink"):
-        a = spark.read.parquet(f"{tmp_path}/once/sinks/{sink}/unit=*")
-        b = spark.read.parquet(f"{tmp_path}/multi/sinks/{sink}/unit=*")
-        assert rows(a, "doc_id", "tokens") == rows(b, "doc_id", "tokens")
 
 
 def test_staged_fanout_matches_persist_and_scans_once(spark, sf_dir,
@@ -662,7 +677,7 @@ def test_auto_fanout_strategy_size_cutover(spark, sf_dir, monkeypatch):
     """fanout_strategy='auto' (the default) picks persist while the
     estimated routed-lineage cache fits guaranteed storage memory and
     staged past that; an un-stat-able input (e.g. an Iceberg catalog
-    table name) is assumed big."""
+    table name) is assumed big, unless the caller passes the size."""
     from opentelemetry_collector_contrib_spark.plans import pipeline as P
     cfg = _cfg(sf_dir, "/tmp/unused")
     assert P._auto_fanout_strategy(spark, cfg) == "persist"  # tiny input
@@ -671,6 +686,9 @@ def test_auto_fanout_strategy_size_cutover(spark, sf_dir, monkeypatch):
     cfg2 = _cfg(sf_dir, "/tmp/unused")
     cfg2.tokens_path = str(sf_dir) + "/no_such_table.parquet"
     assert P._auto_fanout_strategy(spark, cfg2) == "staged"  # unknown size
+    monkeypatch.undo()
+    assert P._auto_fanout_strategy(spark, cfg2, input_bytes=1 << 10) \
+        == "persist"                                          # given size
 
 
 def test_parse_mem_suffixes():
