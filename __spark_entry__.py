@@ -18,6 +18,7 @@ from pyspark.sql import functions as F
 
 from opentelemetry_collector_contrib_spark import datagen
 from opentelemetry_collector_contrib_spark.sources import read_tokens
+from opentelemetry_collector_contrib_spark.functions.tokens import DECODE_SQL_DUCKDB
 from opentelemetry_collector_contrib_spark.operators.regex_parser import (
     RegexParser, kv_extract,
 )
@@ -299,7 +300,7 @@ def _decoded_cte() -> str:
     return f"""
 WITH raw AS (
   SELECT doc_id, tokens, n_tok, source,
-         array_to_string(list_transform(tokens, t -> chr(t)), '') AS body
+         {DECODE_SQL_DUCKDB.format(col='tokens')} AS body
   FROM read_parquet('{d}/tokens.parquet')
 ), parsedg AS (
   SELECT *, regexp_extract(body, '{_LINE_RX}', ['ts','sev','msg']) AS g,

@@ -3,8 +3,9 @@
 These are first-class components alongside the log pipeline: the same
 engine that parses/routes 10^12 tokenized sequences needs exact and
 near dedup over them.  All operators are pure DataFrame compositions
-(no Python in the row loop) and every hash is the portable md5-derived
-family in hashing.py so the DuckDB oracle reproduces results exactly.
+(no Python in the row loop) and every hash is a portable one from
+hashing.py (md5-derived for strings, Horner lanes for token grams) so
+the DuckDB oracle reproduces results exactly.
 
 Scale notes (100 TB):
 - exact dedup: hash-groupBy — map-side partial agg, one shuffle keyed
@@ -36,7 +37,8 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from .hashing import (BANDS, MERSENNE_P, NUM_HASHES, ROWS_PER_BAND,
-                      minhash_expr, portable_hash)
+                      minhash_expr, portable_hash, token_gram_hash32,
+                      token_gram_hash62)
 
 # ---------------------------------------------------------------------------
 # normalization + shingling (shared with the oracle SQL in __spark_entry__)
@@ -332,32 +334,6 @@ def _minhash_lsh_verify(sh: DataFrame, threshold: float, candidates: str,
             .select("id_a", "id_b", "jaccard"))
 
 
-@lru_cache(maxsize=8)
-def token_gram_hash32_udf(k: int):
-    """Arrow-batched token k-gram hasher emitting the DISTINCT portable
-    32-bit hashes H (first 8 md5 hex digits of the comma-joined token
-    ids) per document — the minhash-safe width: H * a_i stays under
-    2^63 in both engines, where the 60-bit profile hashes
-    (``token_gram_hashes_udf``) would overflow the universal-hash
-    product.  The DuckDB oracle computes the identical value from
-    ``array_to_string(tokens[i:i+k-1], ',')``, so 32-bit collisions
-    (if any) are REPRODUCED, not diverged from."""
-    @F.pandas_udf(T.ArrayType(T.LongType()))
-    def gh(tokens: pd.Series) -> pd.Series:
-        import hashlib
-
-        def one(toks):
-            if toks is None or len(toks) < k:
-                return []
-            s = [str(int(t)) for t in toks]
-            return list(dict.fromkeys(
-                int(hashlib.md5(
-                    ",".join(s[i:i + k]).encode()).hexdigest()[:8], 16)
-                for i in range(len(s) - k + 1)))
-        return tokens.map(one)
-    return gh
-
-
 def minhash_tokens_lsh(df: DataFrame, threshold: float = 0.4, k: int = 4,
                        tokens_col: str = "tokens", id_col: str = "doc_id",
                        persist: bool = True,
@@ -365,16 +341,17 @@ def minhash_tokens_lsh(df: DataFrame, threshold: float = 0.4, k: int = 4,
     """Tokens-NATIVE MinHash+LSH near-dedup: fuzzy dedup directly over
     the north-rule input (``tokens: array<int32>``) with NO detokenize
     hop — the shingle universe is token k-grams, hashed to 32-bit in
-    ONE Arrow pass, and everything downstream (signature aggregation,
-    banding, star candidates, exact-Jaccard verify) is the same
-    JVM-side plan as the text path.
+    Catalyst (``hashing.token_gram_hash32``), and everything downstream
+    (signature aggregation, banding, star candidates, exact-Jaccard
+    verify) is the same JVM-side plan as the text path; the whole plan
+    has no Python stage.
 
     Why this matters at 10^12 sequences: the text MinHash path pays a
     detokenize (token ids -> string) plus word normalization before it
     can shingle; on pre-tokenized training data those steps are pure
     overhead — the token ids ARE the canonical form.  Per-doc work
-    drops to one md5 per gram position, and the shuffled rows are 8-byte
-    hashes either way.  Defaults (k=4, threshold=0.4) suit templated
+    drops to one k-step integer Horner fold per gram position, and the
+    shuffled rows are 8-byte hashes either way.  Defaults (k=4, threshold=0.4) suit templated
     log corpora where near-dups share structure but differ in
     timestamps/values.
 
@@ -382,7 +359,7 @@ def minhash_tokens_lsh(df: DataFrame, threshold: float = 0.4, k: int = 4,
     bucket size; the downstream connected-components stage restores
     transitivity) — ``"all_pairs"`` remains the small-N verifier."""
     sh = (df.select(F.col(id_col).alias("id"),
-                    token_gram_hash32_udf(k)(F.col(tokens_col)).alias("sh"))
+                    token_gram_hash32(F.col(tokens_col), k).alias("sh"))
           .withColumn("sz", F.size("sh"))
           .filter(F.col("sz") > 0))
     return _minhash_lsh_verify(sh, threshold, candidates, persist,
@@ -704,32 +681,6 @@ def dedup_lines(df: DataFrame, text_col: str = "text",
 # token-level cross-document n-gram dedup (exact-substring profile)
 # ---------------------------------------------------------------------------
 
-@lru_cache(maxsize=8)
-def token_gram_hashes_udf(n: int):
-    """Arrow-batched token n-gram hasher: tokens (array<int>) -> one
-    60-bit portable hash per gram position (15 md5 hex digits of the
-    comma-joined token ids — the DuckDB oracle computes the identical
-    value from array_to_string(tokens[i:i+n-1], ',')).
-
-    One Python hop per batch; the alternative Catalyst form
-    (transform(sequence(...), slice+concat_ws+md5)) is an interpreted
-    HOF on the per-row hot path — the pattern this repo measured at
-    10-50x slower than Arrow."""
-    @F.pandas_udf(T.ArrayType(T.LongType()))
-    def gh(tokens: pd.Series) -> pd.Series:
-        import hashlib
-
-        def one(toks):
-            if toks is None or len(toks) < n:
-                return []
-            s = [str(int(t)) for t in toks]
-            return [int(hashlib.md5(
-                ",".join(s[i:i + n]).encode()).hexdigest()[:15], 16)
-                for i in range(len(s) - n + 1)]
-        return tokens.map(one)
-    return gh
-
-
 def token_ngram_profile(df: DataFrame, n: int = 13,
                         id_col: str = "doc_id",
                         tokens_col: str = "tokens",
@@ -744,8 +695,9 @@ def token_ngram_profile(df: DataFrame, n: int = 13,
     dup_token_fraction).
 
     Scale shape (the part that matters at 10^12 sequences):
-    - gram hashing is one Arrow hop, emitting 60-bit ints (8 bytes per
-      gram into the shuffle, not the gram text);
+    - gram hashing is a Catalyst expression (``token_gram_hash62``,
+      no Python hop) emitting 62-bit ints (8 bytes per gram into the
+      shuffle, not the gram text);
     - duplicated-gram detection is ONE hash-partitioned aggregate keyed
       by the uniform gram hash (map-side partial count first), and only
       hashes with >= 2 distinct docs survive into the join — at
@@ -757,12 +709,12 @@ def token_ngram_profile(df: DataFrame, n: int = 13,
     from pyspark.sql import Window
     g = df.select(
         F.col(id_col).alias("id"),
-        F.posexplode(token_gram_hashes_udf(n)(F.col(tokens_col)))
+        F.posexplode(token_gram_hash62(F.col(tokens_col), n))
         .alias("pos", "gh"))
     # g feeds both the dup aggregate and the join-back: two passes over
-    # the scan+UDF.  At 10^12 sequences persisting the exploded grams
+    # the scan+hash.  At 10^12 sequences persisting the exploded grams
     # is infeasible, so the two-pass shape is the intended trade; the
-    # doc-side base below reads only size(tokens) — no third UDF pass.
+    # doc-side base below reads only size(tokens) — no third hash pass.
     dup = (g.groupBy("gh")
            .agg(F.count_distinct("id").alias("nd"))
            .filter(F.col("nd") >= 2)
@@ -826,7 +778,7 @@ def remove_dup_spans(df: DataFrame, n: int = 13,
 
     g = df.select(
         F.col(id_col).alias("id"),
-        F.posexplode(token_gram_hashes_udf(n)(F.col(tokens_col)))
+        F.posexplode(token_gram_hash62(F.col(tokens_col), n))
         .alias("pos", "gh"))
     dup = (g.groupBy("gh")
            .agg(F.count_distinct("id").alias("nd"))
@@ -871,26 +823,26 @@ def token_contamination(docs: DataFrame, benchmark: DataFrame,
     doc, the fraction of its token n-grams that occur anywhere in the
     benchmark set — the tokens-native twin of the word-k-gram
     ``curation.contamination`` (no decode; the gram universe is the
-    60-bit portable hash family ``token_gram_hashes_udf`` shares with
-    the exact-substring profile).
+    62-bit portable ``token_gram_hash62`` the exact-substring profile
+    uses).
 
     Output: (id, n_grams, n_hit, hit_frac).  Docs shorter than n
     tokens report (0, 0, 0.0) — nothing to leak.
 
     Scale shape: the benchmark gram set is distinct-aggregated and
     broadcast (benchmarks are small by construction — MMLU-sized sets
-    are ~10^6 grams); the training side is one Arrow gram hop + a
+    are ~10^6 grams); the training side is the Catalyst gram hash + a
     broadcast LEFT join + a per-doc aggregate keyed by the uniform doc
     id.  At 10^12 docs nothing shuffles except 8-byte (id, hit) pairs
     into the partial-agg exchange."""
     bench = (benchmark
-             .select(F.explode(token_gram_hashes_udf(n)(
-                 F.col(tokens_col))).alias("gh"))
+             .select(F.explode(token_gram_hash62(
+                 F.col(tokens_col), n)).alias("gh"))
              .distinct()
              .withColumn("_hit", F.lit(1)))
     g = docs.select(F.col(id_col).alias("id"),
-                    F.explode(token_gram_hashes_udf(n)(
-                        F.col(tokens_col))).alias("gh"))
+                    F.explode(token_gram_hash62(
+                        F.col(tokens_col), n)).alias("gh"))
     per = (g.join(F.broadcast(bench), "gh", "left")
            .groupBy("id")
            .agg(F.count(F.lit(1)).alias("n_grams"),

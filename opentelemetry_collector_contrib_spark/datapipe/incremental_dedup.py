@@ -44,6 +44,8 @@ from pyspark.sql import functions as F
 
 from ..plans.incremental import FileLedger, _cycle_id, list_input_files
 from .bloom import BLOOM_K, BLOOM_M, build_bloom, might_contain
+from .hashing import (GRAM_HASH_SCHEME, NUM_HASHES, minhash_expr,
+                      token_gram_hash32)
 from .token_curation import tokens_digest
 
 
@@ -116,7 +118,7 @@ def _publish_and_commit(survivors: DataFrame, out_dir: str, cycle: str,
                         ledger: FileLedger, files: list[dict],
                         n_in: int, m: int, k: int,
                         fail_before_commit: bool,
-                        extra_writes=None) -> dict:
+                        extra_writes=None, stamp: dict | None = None) -> dict:
     """Write data + digests (+ any extra per-cycle state), OR the
     survivors into the bitmap (idempotent under retry), atomic-rename
     publish, commit the ledger."""
@@ -159,7 +161,7 @@ def _publish_and_commit(survivors: DataFrame, out_dir: str, cycle: str,
     os.replace(tmp, bloom_path)
     ledger.commit_cycle(cycle, files, {
         "rows_in": n_in, "rows_appended": n_app,
-        "rows_dropped": n_in - n_app})
+        "rows_dropped": n_in - n_app, **(stamp or {})})
     return {"status": "complete", "cycle_id": cycle,
             "files_processed": len(files), "rows_in": n_in,
             "rows_appended": n_app}
@@ -205,17 +207,35 @@ def run_dedup_ingest_cycle(spark: SparkSession, input_path: str,
 
 def _gram_frame(df: DataFrame, k_gram: int, id_col: str,
                 tokens_col: str) -> DataFrame:
-    from .dedup import token_gram_hash32_udf
     return (df.select(F.col(id_col).alias("id"),
-                      token_gram_hash32_udf(k_gram)(F.col(tokens_col))
+                      token_gram_hash32(F.col(tokens_col), k_gram)
                       .alias("sh"))
             .withColumn("sz", F.size("sh"))
             .filter(F.col("sz") > 0))
 
 
+def _history_band_dirs(out_dir: str, ledger: FileLedger) -> list[str]:
+    """Committed cycles' band-signature dirs.  Bands are only
+    comparable under one gram hash: a history band written under
+    another scheme would never match a new one, so near-dups of the
+    history would pass silently — refuse instead."""
+    dirs = []
+    for e in ledger.entries():
+        d = os.path.join(out_dir, "bands", f"cycle={e['cycle_id']}")
+        if not os.path.isdir(d):
+            continue
+        if e.get("gram_hash") != GRAM_HASH_SCHEME:
+            raise ValueError(
+                f"cycle {e['cycle_id']} band signatures use gram hash "
+                f"{e.get('gram_hash')!r}, not {GRAM_HASH_SCHEME!r}: they "
+                f"cannot match new bands; rebuild this out_dir "
+                f"({out_dir}) from its inputs")
+        dirs.append(d)
+    return dirs
+
+
 def _bands_of(sh: DataFrame) -> DataFrame:
     from .dedup import _banded
-    from .hashing import NUM_HASHES, minhash_expr
     ex = sh.select("id", F.explode("sh").alias("h"))
     aggs = [F.min(minhash_expr(F.col("h"), i)).alias(f"mh{i}")
             for i in range(NUM_HASHES)]
@@ -258,7 +278,10 @@ def run_fuzzy_dedup_ingest_cycle(spark: SparkSession, input_path: str,
     tokens-curation semantics).
 
     History state per committed cycle: the survivors' band signatures
-    (``bands/cycle=<id>/`` — BANDS rows/doc) next to digests and data.
+    (``bands/cycle=<id>/`` — BANDS rows/doc) next to digests and data;
+    its ledger row records the gram hash scheme the bands were computed
+    with, and a cycle raises on history bands of any other scheme (or
+    with no record) rather than silently never matching them.
     Cross-cycle candidates are ALL (new, historical) pairs sharing a
     (band, sig) bucket — bounded in practice because the history holds
     only SURVIVORS: every earlier cycle collapsed its near-dup
@@ -266,7 +289,7 @@ def run_fuzzy_dedup_ingest_cycle(spark: SparkSession, input_path: str,
     by construction (the in-cycle star+CC did the collapsing).  The
     verify fetches only the candidate historical docs' token arrays
     back from the corpus (a join on the bounded candidate id set, not
-    a history scan) and recomputes their grams in one Arrow hop.
+    a history scan) and recomputes their grams in Catalyst.
 
     Phase order per cycle (deterministic, oracle-checked end-to-end as
     ``fuzzy_dedup_ingest``): within-cycle exact keep-first → exact-
@@ -287,6 +310,7 @@ def run_fuzzy_dedup_ingest_cycle(spark: SparkSession, input_path: str,
         return {"status": "no_new_data",
                 "cycles": len(ledger.committed_cycles())}
     new, cycle = disc
+    band_dirs = _history_band_dirs(out_dir, ledger)
 
     df = (spark.read.option("basePath", input_path)
           .parquet(*[f["path"] for f in new])
@@ -301,9 +325,6 @@ def run_fuzzy_dedup_ingest_cycle(spark: SparkSession, input_path: str,
     sh_new = _gram_frame(fresh, k_gram, id_col, tokens_col).persist()
     bands_new = _bands_of(sh_new).persist()
 
-    band_dirs = [os.path.join(out_dir, "bands", f"cycle={e['cycle_id']}")
-                 for e in ledger.entries()]
-    band_dirs = [d for d in band_dirs if os.path.isdir(d)]
     to_unpersist = []
     if band_dirs:
         bands_h = (spark.read.parquet(*band_dirs)
@@ -374,7 +395,8 @@ def run_fuzzy_dedup_ingest_cycle(spark: SparkSession, input_path: str,
 
     out = _publish_and_commit(survivors, out_dir, cycle, ledger, new,
                               n_in, m, k, fail_before_commit=False,
-                              extra_writes=write_bands)
+                              extra_writes=write_bands,
+                              stamp={"gram_hash": GRAM_HASH_SCHEME})
     for frame in [survivors, fresh2, fresh, sh_new, bands_new] \
             + to_unpersist:
         frame.unpersist()

@@ -15,8 +15,9 @@ The text cascade (``curation.py::curation_pipeline``) needs the
 decoded body for its Gopher/PII stages; on pre-tokenized corpora every
 stage above reads token ids only, so the whole pipeline runs BEFORE
 any decode and its per-stage costs are the tokens-native ones
-(one Arrow hop for quality, digest windows and 8-byte-hash shuffles
-for dedup — never gram text, never document text).
+(one Arrow hop for quality, Catalyst gram hashes, digest windows and
+8-byte-hash shuffles for dedup, one Arrow hop for the span mask —
+never gram text, never document text).
 
 Funnel counts ride ``Observation`` aggregates in the lineage (zero
 extra scans), same as the text cascade.  Every stage is individually

@@ -22,8 +22,11 @@ add columns; ``tokens`` flows through untouched.
 from __future__ import annotations
 
 #: DuckDB-side equivalent of the decode (oracle use).  `{col}` is the
-#: tokens column SQL.
-DECODE_SQL_DUCKDB = "array_to_string(list_transform({col}, t -> chr(t)), '')"
+#: tokens column SQL.  DuckDB's array_to_string gives NULL for an empty
+#: list, where Spark's decode gives ''; a NULL array stays NULL.
+DECODE_SQL_DUCKDB = ("coalesce(array_to_string(list_transform({col}, "
+                     "t -> chr(t)), ''), CASE WHEN {col} IS NOT NULL "
+                     "THEN '' END)")
 
 
 def encode_text(text: str) -> list[int]:

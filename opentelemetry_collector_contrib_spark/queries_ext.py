@@ -21,10 +21,12 @@ from .datapipe.dedup import (dedup_survivors, exact_dedup, minhash_lsh_dedup,
                              simhash_fingerprints, simhash_near_pairs_blocked,
                              embedding_neardup_pairs)
 from .datapipe.hashing import (MERSENNE_P, NUM_HASHES, BANDS, ROWS_PER_BAND,
-                               _A, _B, portable_hash, portable_hash_sql)
+                               _A, _B, portable_hash, portable_hash_sql,
+                               token_gram_hash32_sql, token_gram_hash62_sql)
 from .datapipe.multimodal import extract_features
 from .datapipe.similarity import cosine_topk, lsh_topk
 from .datapipe.textstats import LANGS, STOPWORDS, text_features
+from .functions.tokens import DECODE_SQL_DUCKDB
 from .operators.carbon import CarbonRegexRule, apply_regex_rules, parse_plaintext
 from .operators.spanmetrics import span_metrics
 from .operators.filters import SamplingPolicy, tail_sample
@@ -1785,9 +1787,12 @@ def _tokens_curation_oracle_sql(d: str) -> str:
     (datapipe/token_curation.py): every stage replayed in one query —
     quality keep flags, digest-keyed exact dedup, the minhash_tokens
     star-candidate chain, recursive-CTE connected components,
-    Lee-et-al span removal, and the hash split."""
-    h32 = ("CAST(('0x' || substr(md5(array_to_string(tokens[i:i+3], ',')), "
-           "1, 8)) AS BIGINT)")
+    Lee-et-al span removal, and the hash split.
+
+    ``grams`` and ``edges`` are MATERIALIZED: DuckDB otherwise inlines a
+    CTE at each reference, and the recursive ``reach`` would re-run the
+    whole gram/LSH/verify chain behind ``edges`` at every iteration."""
+    h32 = token_gram_hash32_sql("tokens", "i", 4)
     mh = ", ".join(
         f"min((h * {_A[i]} + {_B[i]}) % {MERSENNE_P}) AS mh{i}"
         for i in range(NUM_HASHES))
@@ -1845,7 +1850,7 @@ def _tokens_curation_oracle_sql(d: str) -> str:
   SELECT doc_id AS id, tokens,
          unnest(generate_series(1, len(tokens) - 3)) AS i
   FROM exact WHERE len(tokens) >= 4
-), grams AS (
+), grams AS MATERIALIZED (
   SELECT DISTINCT id, {h32} AS h FROM pos
 ), szs AS (SELECT id, count(*) AS sz FROM grams GROUP BY id),
 sig AS (SELECT id, {mh} FROM grams GROUP BY id),
@@ -1865,7 +1870,7 @@ inter AS (
   JOIN szs sa ON sa.id = i.id_a
   JOIN szs sb ON sb.id = i.id_b
   WHERE i.inter / (sa.sz + sb.sz - i.inter) >= 0.4
-), edges AS (
+), edges AS MATERIALIZED (
   SELECT id_a AS a, id_b AS b FROM pairs
   UNION ALL
   SELECT id_b, id_a FROM pairs
@@ -1880,8 +1885,7 @@ inter AS (
   JOIN labels l ON l.id = e.doc_id AND l.cluster_id = e.doc_id
 ), s_g AS (
   SELECT doc_id, i - 1 AS pos,
-         CAST(('0x' || substr(md5(array_to_string(tokens[i:i+12], ',')),
-                      1, 15)) AS BIGINT) AS gh
+         {token_gram_hash62_sql("tokens", "i", 13)} AS gh
   FROM (SELECT doc_id, tokens,
                unnest(generate_series(1, len(tokens) - 12)) AS i
         FROM surv)
@@ -1916,9 +1920,13 @@ def _fuzzy_ingest_oracle_sql(d: str) -> str:
     portable-hash-split cycles: within-cycle exact keep-first, exact-
     vs-history digest drop, fuzzy-vs-history (all cross pairs sharing
     a band bucket, exact Jaccard), then in-cycle star+CC survivors —
-    both phases replayed in one query (two recursive CTEs)."""
-    h32 = ("CAST(('0x' || substr(md5(array_to_string(tokens[i:i+3], ',')), "
-           "1, 8)) AS BIGINT)")
+    both phases replayed in one query (two recursive CTEs).
+
+    ``grams``, ``edges*`` and ``s*`` are MATERIALIZED, as in the
+    tokens_curation oracle: inlined, each recursive iteration re-ran
+    the chain behind ``edges*`` and every read of ``s1`` re-ran the
+    recursion (on a 4-core host it ran past 900 s; materialized, ~1 s)."""
+    h32 = token_gram_hash32_sql("tokens", "i", 4)
     mh = ", ".join(
         f"min((h * {_A[i]} + {_B[i]}) % {MERSENNE_P}) AS mh{i}"
         for i in range(NUM_HASHES))
@@ -1939,7 +1947,7 @@ def _fuzzy_ingest_oracle_sql(d: str) -> str:
 )"""
 
     def cc(nodes: str, pairs: str, tag: str) -> str:
-        return f"""edges{tag} AS (
+        return f"""edges{tag} AS MATERIALIZED (
   SELECT id_a AS a, id_b AS b FROM {pairs}
   UNION ALL
   SELECT id_b, id_a FROM {pairs}
@@ -1947,7 +1955,7 @@ def _fuzzy_ingest_oracle_sql(d: str) -> str:
     SELECT id, id FROM {nodes}
   UNION
     SELECT e.b, r.label FROM reach{tag} r JOIN edges{tag} e ON e.a = r.id
-), s{tag} AS (
+), s{tag} AS MATERIALIZED (
   SELECT id FROM (SELECT id, min(label) AS cl FROM reach{tag} GROUP BY id)
   WHERE cl = id
 )"""
@@ -1962,7 +1970,7 @@ def _fuzzy_ingest_oracle_sql(d: str) -> str:
   SELECT doc_id AS id, tokens,
          unnest(generate_series(1, len(tokens) - 3)) AS i
   FROM toks0 WHERE len(tokens) >= 4
-), grams AS (
+), grams AS MATERIALIZED (
   SELECT DISTINCT id, {h32} AS h FROM pos
 ), szs AS (SELECT id, count(*) AS sz FROM grams GROUP BY id),
 sig AS (SELECT id, {mh} FROM grams GROUP BY id),
@@ -2036,7 +2044,7 @@ FROM h""",
 
         "grok_parse": f"""WITH raw AS (
   SELECT doc_id,
-         array_to_string(list_transform(tokens, t -> chr(t)), '') AS body
+         {DECODE_SQL_DUCKDB.format(col='tokens')} AS body
   FROM read_parquet('{d}/tokens.parquet')),
 p AS (
   SELECT doc_id, regexp_matches(body, '{grok_rx}') AS parsed,
@@ -2798,8 +2806,7 @@ FROM n GROUP BY source HAVING sum(nc) > 0""",
   SELECT doc_id, tokens FROM read_parquet('{d}/tokens.parquet')
 ), bench AS (
   SELECT DISTINCT
-         CAST(('0x' || substr(md5(array_to_string(tokens[i:i+12], ',')),
-                      1, 15)) AS BIGINT) AS gh
+         {token_gram_hash62_sql("tokens", "i", 13)} AS gh
   FROM (SELECT tokens, unnest(generate_series(1, len(tokens) - 12)) AS i
         FROM t
         WHERE {portable_hash_sql("'bench:' || doc_id")}
@@ -2807,8 +2814,7 @@ FROM n GROUP BY source HAVING sum(nc) > 0""",
           AND len(tokens) >= 13)
 ), g AS (
   SELECT doc_id,
-         CAST(('0x' || substr(md5(array_to_string(tokens[i:i+12], ',')),
-                      1, 15)) AS BIGINT) AS gh
+         {token_gram_hash62_sql("tokens", "i", 13)} AS gh
   FROM (SELECT doc_id, tokens,
                unnest(generate_series(1, len(tokens) - 12)) AS i
         FROM t WHERE len(tokens) >= 13)
@@ -2878,8 +2884,7 @@ FROM n GROUP BY source HAVING sum(nc) > 0""",
   FROM toks WHERE len(tokens) >= 4
 ), grams AS (
   SELECT DISTINCT id,
-         CAST(('0x' || substr(md5(array_to_string(tokens[i:i+3], ',')),
-                      1, 8)) AS BIGINT) AS h
+         {token_gram_hash32_sql("tokens", "i", 4)} AS h
   FROM pos
 ), szs AS (SELECT id, count(*) AS sz FROM grams GROUP BY id),
 sig AS (SELECT id, {{mh_h}} FROM grams GROUP BY id),
@@ -2986,8 +2991,7 @@ FROM r""",
   FROM t
 ), g AS (
   SELECT doc_id, i - 1 AS pos,
-         CAST(('0x' || substr(md5(array_to_string(tokens[i:i+12], ',')),
-                      1, 15)) AS BIGINT) AS gh
+         {token_gram_hash62_sql("tokens", "i", 13)} AS gh
   FROM gi
 ), dup AS (
   SELECT gh FROM g GROUP BY gh HAVING count(DISTINCT doc_id) >= 2
@@ -3026,8 +3030,7 @@ FROM t LEFT JOIN agg a USING (doc_id)""",
   FROM t
 ), g AS (
   SELECT doc_id, i - 1 AS pos,
-         CAST(('0x' || substr(md5(array_to_string(tokens[i:i+12], ',')),
-                      1, 15)) AS BIGINT) AS gh
+         {token_gram_hash62_sql("tokens", "i", 13)} AS gh
   FROM gi
 ), dup AS (
   SELECT gh FROM g GROUP BY gh HAVING count(DISTINCT doc_id) >= 2
@@ -3059,7 +3062,7 @@ GROUP BY tok ORDER BY n DESC, tok ASC LIMIT 50""",
 
         "pii_scrub": f"""WITH raw AS (
   SELECT doc_id,
-         array_to_string(list_transform(tokens, t -> chr(t)), '') AS body
+         {DECODE_SQL_DUCKDB.format(col='tokens')} AS body
   FROM read_parquet('{d}/tokens.parquet')
 )
 SELECT doc_id,

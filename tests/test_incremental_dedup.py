@@ -173,6 +173,38 @@ def test_fuzzy_history_state_is_survivor_bands_only(spark, tmp_path):
     assert band_ids == {"n0"}
 
 
+@pytest.mark.parametrize("stamp", ["md5-hex8", None])
+def test_fuzzy_cycle_refuses_bands_of_another_gram_hash(spark, tmp_path,
+                                                        stamp):
+    """History bands computed under another gram hash (or written before
+    the scheme was recorded) can never match new bands; the next cycle
+    must fail loudly instead of letting near-dups of history through."""
+    import json
+
+    from opentelemetry_collector_contrib_spark.datapipe.hashing import (
+        GRAM_HASH_SCHEME)
+    from opentelemetry_collector_contrib_spark.datapipe.incremental_dedup \
+        import run_fuzzy_dedup_ingest_cycle
+    src, out = str(tmp_path / "in"), str(tmp_path / "out")
+    _write(spark, src,
+           [(f"n{i}", "s", TEMPLATE + [900 + i]) for i in range(3)])
+    run_fuzzy_dedup_ingest_cycle(spark, src, out, threshold=0.3)
+    ledger = os.path.join(out, "_dedup_ledger", "ledger.jsonl")
+    with open(ledger) as f:
+        rows = [json.loads(line) for line in f]
+    assert [r["gram_hash"] for r in rows] == [GRAM_HASH_SCHEME]
+    for r in rows:
+        r.pop("gram_hash")
+        if stamp is not None:
+            r["gram_hash"] = stamp
+    with open(ledger, "w") as f:
+        f.writelines(json.dumps(r) + "\n" for r in rows)
+    _write(spark, src, [("h0", "s", TEMPLATE + [950])])     # ~ n0
+    with pytest.raises(ValueError, match="rebuild this out_dir"):
+        run_fuzzy_dedup_ingest_cycle(spark, src, out, threshold=0.3)
+    assert _ids(spark, out) == {"n0"}
+
+
 def test_superseded_crashed_cycle_is_vacuumed(spark, tmp_path):
     """A cycle that died before commit and was then superseded by MORE
     arrivals (different cycle id) must not leave digests that suppress

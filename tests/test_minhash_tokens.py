@@ -11,18 +11,10 @@ import pytest
 from pyspark.sql import functions as F
 
 from opentelemetry_collector_contrib_spark.datapipe.dedup import (
-    minhash_tokens_lsh, token_gram_hash32_udf)
+    minhash_tokens_lsh)
 from opentelemetry_collector_contrib_spark.datapipe.hashing import (
-    _A, _B, BANDS, MERSENNE_P, NUM_HASHES, ROWS_PER_BAND)
-
-
-def _grams32(toks: list[int], k: int) -> list[int]:
-    if len(toks) < k:
-        return []
-    return list(dict.fromkeys(
-        int(hashlib.md5(",".join(str(t) for t in toks[i:i + k])
-                        .encode()).hexdigest()[:8], 16)
-        for i in range(len(toks) - k + 1)))
+    _A, _B, BANDS, MERSENNE_P, NUM_HASHES, ROWS_PER_BAND, token_gram_hash32,
+    token_gram_hash32_py as _grams32)
 
 
 def _twin_pairs(docs: dict[str, list[int]], k: int,
@@ -122,7 +114,7 @@ def test_token_gram_hash32_dedupes_and_guards_short(spark):
         "doc_id string, tokens array<int>")
     rows = {r.doc_id: r.sh for r in
             df.select("doc_id",
-                      token_gram_hash32_udf(4)(F.col("tokens")).alias("sh"))
+                      token_gram_hash32(F.col("tokens"), 4).alias("sh"))
             .collect()}
     assert rows["b"] == []
     # 6 tokens, k=4 -> 3 gram positions: (1,2,1,2), (2,1,2,1), (1,2,1,2)

@@ -81,7 +81,7 @@ def test_with_body_decodes_wide_codepoints(spark):
     import pyarrow as pa
     from opentelemetry_collector_contrib_spark.functions.tokens import (
         DECODE_SQL_DUCKDB, decode_arrow)
-    lines = ["h\u00e9llo \u4e16\u754c\U0001F600", LINE]
+    lines = ["h\u00e9llo \u4e16\u754c\U0001F600", LINE, ""]
     toks = [[ord(c) for c in l] for l in lines]
     df = spark.createDataFrame(list(enumerate(toks)),
                                "i int, tokens array<int>")
@@ -91,6 +91,23 @@ def test_with_body_decodes_wide_codepoints(spark):
         "SELECT list_transform(?::INT[][], tok -> "
         f"{DECODE_SQL_DUCKDB.format(col='tok')})", [toks]).fetchone()
     assert spark_body == arrow_body.to_pylist() == duck_body == lines
+
+
+def test_decode_oracle_matches_spark_on_empty_and_null(spark):
+    """The oracle decode gives '' for an empty token array and NULL for a
+    NULL one, as Spark's with_body does (DuckDB's array_to_string alone
+    turns the empty list into NULL)."""
+    from opentelemetry_collector_contrib_spark.functions.tokens import (
+        DECODE_SQL_DUCKDB)
+    toks = [[], None, [104, 105]]
+    df = spark.createDataFrame(list(enumerate(toks)),
+                               "i int, tokens array<int>")
+    spark_body = [r["body"] for r in with_body(df).orderBy("i").collect()]
+    duck_body = [r[0] for r in duckdb.connect().execute(
+        f"SELECT {DECODE_SQL_DUCKDB.format(col='tokens')} FROM "
+        "(SELECT unnest(?::INT[][]) AS tokens, "
+        "unnest(range(3)) AS i) ORDER BY i", [toks]).fetchall()]
+    assert spark_body == duck_body == ["", None, "hi"]
 
 
 def test_arrow_backend_falls_back_on_re2_reject():

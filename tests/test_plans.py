@@ -175,17 +175,25 @@ def test_xray_translation_is_narrow(spark):
     assert "Exchange" not in plan and "EvalPython" not in plan
 
 
-def test_ngram_profile_is_two_arrow_passes(spark):
-    # the gram UDF runs exactly twice (dup-aggregate side + join-back
-    # side) — the doc base must not re-derive counts through the UDF
+def _executed_plan(df) -> str:
+    df.collect()
+    return df._jdf.queryExecution().executedPlan().toString()
+
+
+def test_token_gram_ops_have_no_python_stage(spark):
+    """Token-gram hashing is Catalyst: the executed plans of the
+    MinHash and span-profile ops hold no Python-boundary node."""
     from opentelemetry_collector_contrib_spark.datapipe.dedup import (
-        token_ngram_profile)
-    df = spark.createDataFrame([("d", [1, 2, 3])],
-                               "doc_id string, tokens array<int>")
-    plan = plan_of(token_ngram_profile(df, n=2))
-    assert len(re.findall(r"\(\d+\) ArrowEvalPython", plan)) == 2
+        minhash_tokens_lsh, token_ngram_profile)
+    df = spark.createDataFrame(
+        [("d", [1, 2, 3, 4, 5]), ("e", [1, 2, 3, 4, 6])],
+        "doc_id string, tokens array<int>")
+    profile = token_ngram_profile(df, n=2)
     # dup detection is two-phase: partial count before the exchange
-    assert "partial_count" in plan
+    assert "partial_count" in plan_of(profile)
+    for op in (minhash_tokens_lsh(df, threshold=0.1, k=2), profile):
+        plan = _executed_plan(op)
+        assert "EvalPython" not in plan and "MapInArrow" not in plan, plan
 
 
 def test_stratified_sample_is_shuffle_free(spark):
